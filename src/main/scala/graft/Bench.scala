@@ -145,15 +145,25 @@ object Bench {
       "m6_ann_ivfpq", "m6_ann_ivfpq_rerank", "m6_ann_eval", "m6_rrf_fusion_ann",
       "m6_incremental_ivf", "m6_ann_forget", "m6_ann_purge", "m6_ann_compact",
       "m4r_stream_ann_forget", "m4o_stream_ivf")
-    // Staging failures degrade like query failures (logged, zero-cost entry,
-    // bench continues) — a custom sf dir missing a table must not abort the
-    // other ~90 entries. Builds are scoped to the selection.
-    def staged(name: String)(body: => Unit): Seq[(String, Double, Double)] = {
-      val t = timed(
-        try body
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") })
-      Seq((name, t._1, t._2))
-    }
+    // An entry (query or staging build) that throws is reported in the
+    // `failed` map (name → exception class) of both stdout lines and left
+    // out of every time map and total — timing a failure as a success
+    // would score a broken entry as fast. The bench continues: a custom sf
+    // dir missing a table must not abort the other ~90 entries. A
+    // SPARK_GRAFT_QUERIES name the registry lacks is failed too.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    only.foreach(_.diff(SparkEntry.queries.keySet).toSeq.sorted
+      .foreach(failed(_) = "not registered"))
+    def entry(name: String)(body: => Unit): Option[(String, Double, Double)] =
+      try { val (w, c) = timed(body); Some((name, w, c)) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        failed(name) = e.getClass.getName
+        None
+      }
+    // staging builds are scoped to the selection
+    def staged(name: String)(body: => Unit): Seq[(String, Double, Double)] =
+      entry(name)(body).toSeq
     val selectedNames = selected.map(_._1).toSet
     // stage TEMPERATURE: the same staging entry costs ~seconds cold (first
     // build for this corpus version) and ~nothing warm (committed warehouse
@@ -190,13 +200,10 @@ object Bench {
           graft.operators.Joins.ensureBucketedTables(spark, sfDir)
         }
       } else Seq.empty)
-    val results = staging ++ selected.map { case (name, fn) =>
+    val results = staging ++ selected.flatMap { case (name, fn) =>
       // noop sink: full evaluation of every output column (a bare count()
       // would let Catalyst prune the projections away), zero write cost.
-      val (wall, cpu) = timed {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-      }
+      val r = entry(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       // per-query cache isolation: operators may persist() shared subplans;
       // dropping them between entries keeps attribution honest and the
       // 90+-query session from accumulating every cache for its lifetime
@@ -210,14 +217,14 @@ object Bench {
       // unrelated pipelines in one driver; per-query numbers shouldn't
       // bill one query for its predecessors' garbage.
       System.gc()
-      (name, wall, cpu)
+      r
     }
-    def fmt(xs: Seq[(String, Double)]) =
+    def fmt(xs: Seq[(String, Any)]) =
       xs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = fmt(failed.toSeq.map { case (k, v) => k -> ("\"" + v + "\"") })
     val total = results.map(_._2).sum
     val cpuTotal = results.map(_._3).sum
-    val coldJson = stagingCold
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val coldJson = fmt(stagingCold.toSeq)
     // Subtotals: the ~10 streaming drains (m4*) are fixed RocksDB/checkpoint
     // machinery at test scale and carry nearly all the cross-machine jitter
     // (round-7 A/B: 57–62 s for near-identical code), so round-over-round
@@ -242,6 +249,7 @@ object Bench {
       s""""staging_total":$stagingTotal,""" +
       s""""queries":${fmt(results.map(r => r._1 -> r._2))},""" +
       s""""cpu_sec":${fmt(results.map(r => r._1 -> r._3))},""" +
+      s""""failed":$failedJson,""" +
       s""""staging_cold":$coldJson,""" +
       s""""cpu_total":$cpuTotal,"load_avg_gate":$loadGate,""" +
       s""""load_avg_start":$loadStart,""" +
@@ -262,6 +270,7 @@ object Bench {
       s""""contended":$contended,"sf":"$sfDir",""" +
       s""""queries":${fmt(top.map(r => r._1 -> r._2))},""" +
       s""""queries_omitted":${results.size - top.size},""" +
+      s""""failed":$failedJson,""" +
       s""""full_map":"$fullOut"}"""
     println(compact)
     println(json)

@@ -69,10 +69,6 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Audit mode: operators with an eagerly-scoped internal persist
-    // (TextAnalysis.postings) return their full lazy plan instead — this
-    // session only prints plans, never executes them.
-    spark.conf.set("spark.graft.lazyPlans", "true")
     Tables.bootstrap(spark)
     if (name == "all" || name == "headline") {
       // dump the plans to EXPLAINS.md — the reviewable plan-audit
@@ -99,9 +95,12 @@ object Explain {
       sel.foreach { q =>
         val plan = SparkEntry.queries(q)(spark, sfDir)
           .queryExecution.explainString(mode)
-        // iterative operators (bpe_train: 8 self-similar rounds) produce
-        // 20k-line lazy plans; the audit value is in the first occurrences
-        // of each shape, so cap a runaway dump
+        // drop the query's persisted intermediates, as Bench and Verify do
+        // per entry, so no later plan reads an earlier query's cache
+        spark.catalog.clearCache()
+        // deep plans (multi-branch pair searches, cached subtrees printed
+        // under every read) run to hundreds of lines; the audit value is
+        // in the first occurrences of each shape, so cap a runaway dump
         val lines = plan.linesIterator.toSeq
         val capped =
           if (lines.length <= 600) plan

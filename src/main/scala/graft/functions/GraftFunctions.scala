@@ -11,7 +11,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *   - `GraftExtensions` for `spark.sql.extensions=graft.functions.GraftExtensions`
   *     (session-build-time injection — the standard extension-point route);
   *   - `GraftFunctions.register(spark)` for sessions the library did not build
-  *     (idempotent; entry points and query builders call it defensively).
+  *     (idempotent; entry points and query builders call it defensively, so
+  *     it adds only the names the session registry lacks — re-registering
+  *     would log a "replaced a previously registered function" WARN per
+  *     name per call).
   */
 object GraftFunctions {
 
@@ -30,11 +33,13 @@ object GraftFunctions {
     "graft_bloom_agg" -> (es => new BloomFilterAggregate(es(0), es(1), es(2))),
     "graft_bloom_might_contain" -> (es => BloomFilterMightContain(es(0), es(1))))
 
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   private[functions] def injectAll(ext: SparkSessionExtensions): Unit =
     builders.foreach { case (name, builder) =>

@@ -731,25 +731,30 @@ object Dedup {
       idOut: String): DataFrame =
     connectedComponentsWithRounds(pairs, idOut)._1
 
+  /** The per-round lineage cut shared by the iterative loops (the CC
+    * contraction below, TextAnalysis.bpeLearn): a LAZY localCheckpoint
+    * whose materializing action is the round's first job — for CC the
+    * convergence count, so one job does both (r20 opt round, guide §1.2;
+    * the r19 shape ran an eager checkpoint job and then a separate count
+    * job per round). The checkpoint truncates the logical plan to the
+    * materialized RDD: an iterative plan that references its previous
+    * round several times per phase otherwise grows multiplicatively — by
+    * round ~15 merely STRINGIFYING the (DAG-shared, tree-expanded) plan
+    * OOMs the driver, and Catalyst re-analysis cost grows the same way.
+    * Superseded round checkpoints are reclaimed by the ContextCleaner once
+    * unreferenced. Local checkpoint blocks do not survive executor loss;
+    * a reliable `checkpoint` under a checkpoint dir is the cluster form. */
+  private[operators] def cutLineage(df: DataFrame): DataFrame =
+    df.localCheckpoint(false)
+
   /** The contraction loop behind connectedComponents, reporting the round
     * count (test surface for the O(log n) convergence bound).
     *
-    * Each round ends in a LAZY localCheckpoint whose materializing action
-    * is the round's convergence count — one job does both (r20 opt round,
-    * guide §1.2; the r19 shape ran an eager checkpoint job and then a
-    * separate count job per round). The checkpoint still truncates the
-    * logical plan to the materialized RDD once that first job completes:
-    * an iterative plan that references its previous round several times
-    * per phase otherwise grows multiplicatively — by round ~15 merely
-    * STRINGIFYING the (DAG-shared, tree-expanded) plan OOMs the driver,
-    * and Catalyst re-analysis cost grows the same way. Superseded round
-    * checkpoints are reclaimed by the ContextCleaner once unreferenced; on
-    * a real cluster the same call (or a reliable `checkpoint` under a
-    * checkpoint dir for lost-executor safety) plays this role. The
-    * returned labels frame derives straight from the final checkpoint, so
-    * it needs no persist of its own — callers re-running actions replay
-    * two narrow projections over a materialized RDD, and nothing this
-    * function cached outlives it. */
+    * Each round ends in a cutLineage whose materializing action is the
+    * round's convergence count. The returned labels frame derives straight
+    * from the final checkpoint, so it needs no persist of its own — callers
+    * re-running actions replay two narrow projections over a materialized
+    * RDD, and nothing this function cached outlives it. */
   private[graft] def connectedComponentsWithRounds(pairs: DataFrame,
       idOut: String): (DataFrame, Int) = {
     val Array(ca, cb) = pairs.columns
@@ -765,14 +770,13 @@ object Dedup {
     // Current pair sources never emit self-pairs, making the singleton leg
     // a zero-row guard, but the shared helper's contract must not depend
     // on that.
-    val canon = pairs
+    val canon = cutLineage(pairs
       .select(greatest(col(ca), col(cb)).as("hi"),
-        least(col(ca), col(cb)).as("lo"))
-      .localCheckpoint(false)
+        least(col(ca), col(cb)).as("lo")))
     val selfIds = canon.filter(col("hi") === col("lo"))
       .select(col("hi").as("id")).distinct()
-    var edges = canon
-      .filter(col("hi") =!= col("lo")).distinct().localCheckpoint(false)
+    var edges = cutLineage(canon
+      .filter(col("hi") =!= col("lo")).distinct())
     var n = edges.count()
     var rounds = 0
     var converged = n == 0
@@ -791,13 +795,13 @@ object Dedup {
       // groups its smaller neighbors; all of them (and itself) re-point to
       // the group min
       val smin = large.groupBy("hi").agg(min("lo").as("m"))
-      val next = large.join(smin, Seq("hi"))
+      val next = cutLineage(large.join(smin, Seq("hi"))
         .select(col("lo").as("x"), col("m").as("y"))
         .unionAll(smin.select(col("hi").as("x"), col("m").as("y")))
         .filter(col("x") =!= col("y"))
         .select(greatest(col("x"), col("y")).as("hi"),
           least(col("x"), col("y")).as("lo"))
-        .distinct().localCheckpoint(false)
+        .distinct())
       val nNext = next.count() // materializes the lazy checkpoint — one job
       // both sides are distinct sets, so equal size + empty difference ⇔
       // set equality: two actions over node-bounded frames, O(log n) times
@@ -897,18 +901,11 @@ object Dedup {
 
   /** The serialized Bloom sketch over the held-out shingle set — built once
     * per release (or per streaming JOB: the m4t gate binds it before the
-    * stream starts, the m4o frozen-quantizer discipline). Audit mode
-    * (Explain sets spark.graft.lazyPlans) never executes, so the sketch is
-    * a driver-built placeholder: identical plan shape (binary literal +
-    * might_contain in the scan stage), zero actions. */
+    * stream starts, the m4o frozen-quantizer discipline). */
   private[graft] def heldoutSketch(
       spark: SparkSession, dir: String, forceBits: Option[Long] = None): Array[Byte] = {
     import org.apache.spark.util.sketch.BloomFilter
     graft.functions.GraftFunctions.register(spark)
-    if (TextAnalysis.lazyPlans(spark)) {
-      val bos = new java.io.ByteArrayOutputStream()
-      BloomFilter.create(1024).writeTo(bos); return bos.toByteArray
-    }
     // SCOPED persist: the sizing count and the sketch aggregate are two
     // actions over the same distinct frame — one evaluation, not two;
     // unpersisted before returning (the postings discipline)

@@ -495,19 +495,11 @@ object Multimodal {
     // plan branches (the distinct-signature build, both membership joins,
     // and the identical-signature self-join) — unpersisted, each branch
     // re-decoded the whole corpus (r17 verdict #3: four MapPartitions
-    // subtrees per query plan). Persist SCOPED: 4 machine words + a flag
-    // per doc, the cheapest possible cache; the lazyPlans escape keeps the
-    // Explain artifact on the full lazy plan. Cluster note (r18 ADVICE):
-    // localCheckpoint(true) executes EAGERLY at construction and its blocks
-    // are unrecoverable on executor loss — a multi-executor deployment that
-    // builds frames it may never consume should set spark.graft.lazyPlans
-    // (or swap in reliable checkpoint under a checkpoint dir); the scoped
-    // eager form is the single-JVM bench/serving shape.
-    if (TextAnalysis.lazyPlans(hashed0.sparkSession))
-      return ahashPairsOn(hashed0, w)
-    val hashed = hashed0.persist()
-    try ahashPairsOn(hashed, w).localCheckpoint(true)
-    finally hashed.unpersist()
+    // subtrees per query plan). Persist: 4 machine words + a flag per doc,
+    // the cheapest possible cache, and a lost block recomputes from
+    // lineage. The result stays lazy; the caller's per-entry clearCache
+    // drops the cache.
+    ahashPairsOn(hashed0.persist(), w)
   }
 
   private def ahashPairsOn(hashed: DataFrame, w: Int): DataFrame = {
@@ -1036,7 +1028,7 @@ object Multimodal {
     * one equi-join (O(keyframes)); the near-dup leg is chunk-blocked over
     * DISTINCT signatures with no member fan-out — output is
     * O(keyframes + verified signature pairs), never quadratic in group
-    * size. The keyframe frame is scope-persisted: it feeds the
+    * size. The keyframe frame is persisted: it feeds the
     * corpus-count (chunk geometry) and the hash path, and re-deriving it
     * would re-run decode + segmentation per consumer. */
   def keyframeAhash(spark: SparkSession, dir: String): DataFrame = {
@@ -1051,23 +1043,14 @@ object Multimodal {
           col("hamming"))
         .filter(col("clip_a") =!= col("clip_b"))
     }
-    val kfc = keyframeCorpus(spark, dir)
-    if (TextAnalysis.lazyPlans(spark))
-      return result(kfc, ahashHashedOf(spark, kfc))
-    // the ahashPairs scope-persist convention: localCheckpoint(true)
-    // EXECUTES the edge frame while the keyframe corpus is still cached —
-    // returning the lazy frame and unpersisting first would re-run decode +
-    // segmentation once per plan branch (three consumers) at action time.
-    // The HASHED frame is scope-persisted too (the ahashPairs discipline —
+    // the ahashPairs persist convention: the keyframe corpus feeds the
+    // corpus count and the hash path, and unpersisted each consumer would
+    // re-run decode + segmentation. The HASHED frame is persisted too —
     // keyframeClusterEdges consumes it in three branches: hub groups, the
     // star join, and the clean-representative chunk path; unpersisted, the
-    // keyframe aHash decode ran three times per query).
-    val kf = kfc.persist()
-    try {
-      val hashed = ahashHashedOf(spark, kf).persist()
-      try result(kf, hashed).localCheckpoint(true)
-      finally hashed.unpersist()
-    } finally kf.unpersist()
+    // keyframe aHash decode ran three times per query.
+    val kf = keyframeCorpus(spark, dir).persist()
+    result(kf, ahashHashedOf(spark, kf).persist())
   }
 
   /** Cluster-edge pair search over hashed keyframe signatures (see the
@@ -1164,7 +1147,7 @@ object Multimodal {
     *
     * Output: one audit row per pair — gates, cluster, keeper, kept.
     *
-    * 100 TB shape: one corpus scan builds the pair frame (scope-persisted:
+    * 100 TB shape: one corpus scan builds the pair frame (persisted:
     * it feeds both gate legs, both side-key frames, and the output
     * scaffold); the caption gate is explode + one keyed agg, the image
     * gate one narrow mapPartitions decode; edges are key-grouped mins
@@ -1173,11 +1156,7 @@ object Multimodal {
     * equi-joins. No windows, no cartesians, no driver state. */
   def pairCuration(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val pf = pairFixture(spark, dir)
-    if (TextAnalysis.lazyPlans(spark)) return pairCurationOn(spark, pf)
-    val p = pf.persist()
-    try pairCurationOn(spark, p).localCheckpoint(true)
-    finally p.unpersist()
+    pairCurationOn(spark, pairFixture(spark, dir).persist())
   }
 
   private def pairCurationOn(spark: SparkSession, px: DataFrame): DataFrame = {

@@ -41,13 +41,6 @@ object TextAnalysis {
         i => concat_ws(" ", (1 to k).map(j => element_at(toks, i + j)): _*)))
       .otherwise(array())
 
-  /** Plan-audit escape hatch: graft.Explain sets `spark.graft.lazyPlans` so
-    * operators that eagerly scope an internal persist (postings) return
-    * their full lazy plan for the EXPLAINS artifact instead — audit
-    * sessions only print plans, never execute them. */
-  private[operators] def lazyPlans(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.lazyPlans").contains("true")
-
   /** Memoized documents cardinality per fixture — the Similarity.corpusN
     * discipline applied to the text corpus: several operators (packShards
     * sizing, tfidf's N, the simhash chunk width) need the corpus row count
@@ -689,7 +682,7 @@ object TextAnalysis {
     * same degenerate tails a perplexity cut targets.
     *
     * 100 TB shape: ONE bigram explode (corpus-token volume) — the skinny
-    * (doc_id, n_bigrams, w1, w2) frame persists SCOPED because it feeds
+    * (doc_id, n_bigrams, w1, w2) frame is persisted because it feeds
     * BOTH the count build and the position-side join probe, and the count
     * side broadcasts, so no exchange is shared between the two consumers:
     * unpersisted, each re-ran the fanout + normTokens + explode subtree
@@ -720,10 +713,7 @@ object TextAnalysis {
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("doc_id"), col("n_bigrams"),
         col("p.w1").as("w1"), col("p.w2").as("w2"))
-    if (lazyPlans(spark)) return served(bg0)
-    val bg = bg0.persist()
-    try served(bg).localCheckpoint(true)
-    finally bg.unpersist()
+    served(bg0.persist())
   }
 
   /** M6: passage-level boilerplate scrub — the paragraph-granularity dedup
@@ -748,8 +738,8 @@ object TextAnalysis {
     * near-uniform, reassembly partitions are documents). Work is linear in
     * corpus tokens at every stage. `base` feeds the passage explode AND
     * the final doc-level join, and `passages` feeds the flood census AND
-    * the anti-join probe — both persist SCOPED (the spansBase :907/:979
-    * precedent; the flood side broadcasts so no exchange is shared):
+    * the anti-join probe — both are persisted (the spansBase precedent;
+    * the flood side broadcasts so no exchange is shared):
     * unpersisted, the corpus was scanned and tokenized THREE times per
     * query, the 100× probe's #2 leg until r18. */
   def passageScrub(spark: SparkSession, dir: String): DataFrame = {
@@ -790,11 +780,8 @@ object TextAnalysis {
       .withColumn("tail_txt",
         array_join(slice(col("toks"),
           (col("n_passages") * P + 1).cast("int"), lit(P)), " "))
-    if (lazyPlans(spark)) return served(base0, passagesOf(base0))
     val base = base0.persist()
-    val passages = passagesOf(base).persist()
-    try served(base, passages).localCheckpoint(true)
-    finally { passages.unpersist(); base.unpersist() }
+    served(base, passagesOf(base).persist())
   }
 
   /** M6: exact repeated-span census — substring-level duplication, the
@@ -837,8 +824,7 @@ object TextAnalysis {
     * query's 100× probe leg before being killed; the integer form is
     * the same census at hash-of-token cost. The skinny (doc, pos, h1,
     * h2) frame feeds both the flood census and the dup side, so it
-    * persists SCOPED (the releaseDiff discipline: ~30 bytes/row, gone
-    * before return). */
+    * is persisted (~30 bytes/row). */
   /** The span-census window width and the excerpt-plant fixture shared by
     * the census (m6_repeated_spans) and the scrub (m6_span_scrub): every
     * 29th document's first 40 tokens re-arrive as an excerpt doc at
@@ -920,19 +906,14 @@ object TextAnalysis {
             .otherwise(lit(0.0)).as("dup_frac"),
           coalesce(col("longest_run") + (W - 1), lit(0L)).as("longest_span"))
     }
-    if (lazyPlans(spark))
-      return census(spanWindowHashes(spark, base0.filter(col("n") >= W)), base0)
     // base feeds BOTH the window-hash pass and the final doc-level join —
     // without a persist each consumer re-runs the fanout+normTokens subtree,
     // so the corpus was tokenized TWICE per query (the r16 residual, now
-    // closed): scope-persist the skinny (doc_id, toks, n) frame so
-    // tokenization happens once, gone before return (the releaseDiff
-    // discipline). wh persists too: it feeds the flood census AND the runs
+    // closed): persist the skinny (doc_id, toks, n) frame so tokenization
+    // happens once. wh persists too: it feeds the flood census AND the runs
     // join, and is wider (one row per window).
     val base = base0.persist()
-    val p = spanWindowHashes(spark, base.filter(col("n") >= W)).persist()
-    try census(p, base).localCheckpoint(true)
-    finally { p.unpersist(); base.unpersist() }
+    census(spanWindowHashes(spark, base.filter(col("n") >= W)).persist(), base)
   }
 
   /** M6: exact repeated-span SCRUB — the production leg of the span census
@@ -995,16 +976,12 @@ object TextAnalysis {
           (id, toks.length.toLong, toks.length - nKept, kept.result())
         }.toDF("doc_id", "n_tokens", "n_scrubbed", "kept_text")
     }
-    if (lazyPlans(spark))
-      return served(spanWindowHashes(spark, base0.filter(col("n") >= W)), base0)
     // base feeds the window-hash pass AND the typed rebuild join — persist
-    // scoped so the corpus is tokenized once per query (the r16 residual,
-    // closed with repeatedSpans); wh feeds both the flood census and the
-    // foreign-window join — persist scoped, gone before return
+    // so the corpus is tokenized once per query (the r16 residual, closed
+    // with repeatedSpans); wh feeds both the flood census and the
+    // foreign-window join, so it persists too
     val base = base0.persist()
-    val p = spanWindowHashes(spark, base.filter(col("n") >= W)).persist()
-    try served(p, base).localCheckpoint(true)
-    finally { p.unpersist(); base.unpersist() }
+    served(spanWindowHashes(spark, base.filter(col("n") >= W)).persist(), base)
   }
 
   /** M6: inverted-index postings — the index-release artifact behind
@@ -1045,20 +1022,12 @@ object TextAnalysis {
         .select(col("term"), col("df"),
           array_join(transform(col("ids"), i => i.cast("string")), ",").as("posting"))
     }
-    // Audit mode (Explain sets spark.graft.lazyPlans) returns the full lazy
-    // plan and never executes it, so the persist below stays inert there.
-    if (lazyPlans(spark)) return build(dt)
     // dt is narrow (no exchange to reuse) and feeds BOTH the df count and
     // the posting build — without within-query reuse the shingling pass
-    // (the expensive part; the measured-40× HOF lesson) runs twice. The
-    // persist is therefore load-bearing, but SCOPED: the result (the ≤50-
-    // entry posting rows, the released index artifact) is materialized
-    // eagerly and dt unpersisted before returning — nothing this function
-    // caches outlives it (the Connectors.mergeInto try/finally discipline;
-    // round-7's session-lifetime cache leak).
-    val p = dt.persist()
-    try build(p).localCheckpoint(true)
-    finally p.unpersist()
+    // (the expensive part; the measured-40× HOF lesson) runs twice, so the
+    // persist is load-bearing. The result stays lazy: the cached blocks are
+    // a recomputable cache, dropped by the caller's per-entry clearCache.
+    build(dt.persist())
   }
 
   /** M6: epoch-weighted mixture MATERIALIZATION — sample_mix decides
@@ -1297,14 +1266,13 @@ object TextAnalysis {
     * final merged vocabulary (word, f, seq). */
   private[graft] def bpeLearn(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
-    val lzy = lazyPlans(spark)
     var w = Tables.fanout(Tables.documents(spark, dir))
       .select(explode(normTokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("f"))
       .select(col("word"), col("f"),
         concat(lit("|"), array_join(split(col("word"), ""), " |")).as("seq"))
     val steps = (1 to 8).map { i =>
-      if (!lzy) w = w.localCheckpoint(true)
+      w = Dedup.cutLineage(w)
       val top = w
         // seq's token array materializes before the shingle transform —
         // the ProfContam-measured discipline; bounded here (a word's
@@ -1335,10 +1303,9 @@ object TextAnalysis {
     * 100 TB shape: after the single corpus pass that builds word
     * frequencies, EVERY round runs over the vocabulary table (distinct
     * words), which is millions of rows at web scale — not the corpus. Each
-    * round eagerly localCheckpoints the vocab frame (the CC-loop
-    * precedent) so round i+1 reads materialized rows instead of recursing
-    * through i plans; Explain's lazyPlans flag returns the pure lazy
-    * composition for plan audit. */
+    * round cuts the vocab frame's lineage (Dedup.cutLineage, shared with
+    * the CC loop) so round i+1 reads materialized rows instead of
+    * recursing through i plans. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
     bpeLearn(spark, dir)._1.reduce(_ unionAll _)
 
@@ -1735,21 +1702,15 @@ object TextAnalysis {
     }
     val fpa = fp(Tables.fanout(Tables.documents(spark, dir))
       .select(col("doc_id"), normTokens(col("text")).as("toks")))
-    // Audit mode (Explain sets spark.graft.lazyPlans) returns the full lazy
-    // plan and never executes it, so the persist below stays inert there.
-    if (lazyPlans(spark)) return census(fpa)
     // fpa — release A's skinny (doc_id, n, fp) manifest — feeds BOTH the
     // diff join's A side AND the untouched-doc reuse branch of release B.
     // Without within-query reuse (narrow subtree, no exchange for AQE to
     // share) the A-side tokenize+hash pass runs twice: the r15 100× probe
     // measured it as half the query's 43.6 s. The persist is load-bearing
-    // but SCOPED (the postings discipline): the 4-row census materializes
-    // eagerly, fpa unpersists before returning — nothing outlives the call.
+    // (the postings discipline: a lazy result over a recomputable cache).
     // At 100 TB the ~50-byte rows persist MEMORY_AND_DISK like any release
     // manifest; production would stage them with the corpus release.
-    val p = fpa.persist()
-    try census(p).localCheckpoint(true)
-    finally p.unpersist()
+    census(fpa.persist())
   }
 
   /** The arriving-document batch fixture for m6_incremental_index: every

@@ -57,4 +57,24 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
       call_function("graft_md5_lo32", col("text")).as("elo"))
     assert(cmp.filter(col("hi") =!= col("ehi") || col("lo") =!= col("elo")).count() == 0)
   }
+
+  test("register adds only missing names: repeated calls re-register nothing") {
+    import graft.functions.GraftFunctions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("graft_dot", "graft_fold60", "graft_md5_hi32", "graft_md5_lo32",
+      "graft_md5_long64", "graft_bloom_agg", "graft_bloom_might_contain")
+    GraftFunctions.register(spark)
+    val infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    assert(infos.forall(_.isDefined), s"unresolved: ${names.zip(infos)}")
+    GraftFunctions.register(spark)
+    // a re-registration installs a fresh ExpressionInfo: same instance = untouched
+    names.zip(infos).foreach { case (n, before) =>
+      val after = registry.lookupFunction(FunctionIdentifier(n))
+      assert(after.exists(_ eq before.get), s"$n was re-registered")
+    }
+    val r = spark.sql("SELECT graft_fold60('a') AS f, graft_md5_long64('a') AS l, " +
+      "graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head()
+    assert(r.getAs[Double]("d") == 11.0)
+  }
 }

@@ -13,18 +13,34 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
-    // audit the FULL lazy plan (the Explain convention): operators with an
-    // eagerly-scoped internal persist (passage scrub, lm support, the
-    // span census/scrub, the perceptual pair searches) would otherwise
-    // return a localCheckpoint-truncated ExistingRDD scan with nothing to
-    // assert on
-    spark.conf.set("spark.graft.lazyPlans", "true")
-    try {
-      val df: DataFrame = SparkEntry.queries(name)(spark, dir)
-      val s = df.queryExecution.executedPlan.toString
-      spark.catalog.clearCache()
-      s
-    } finally spark.conf.unset("spark.graft.lazyPlans")
+    val df: DataFrame = SparkEntry.queries(name)(spark, dir)
+    val s = df.queryExecution.executedPlan.toString
+    spark.catalog.clearCache()
+    s
+  }
+
+  /** How many times `name`'s plan reads each persisted intermediate. Reads
+    * nested inside another cache's plan count too (a frame persisted over
+    * a persisted frame reads it there). */
+  private def cacheReads(name: String): Seq[Int] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // keyed by the relation's cache builder: every read of one persisted
+    // frame shares it
+    val reads = new java.util.IdentityHashMap[AnyRef, Int]()
+    def walk(p: SparkPlan): Unit =
+      helper.collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+        .foreach { b =>
+          val seen = reads.containsKey(b)
+          reads.put(b, if (seen) reads.get(b) + 1 else 1)
+          if (!seen) walk(b.cachedPlan)
+        }
+    walk(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+    spark.catalog.clearCache()
+    import scala.jdk.CollectionConverters._
+    reads.values.asScala.toSeq
   }
 
   test("pushdown: filters reach the parquet scan") {
@@ -455,13 +471,8 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
       s"compacted catalog must not reference the external release member:\n$compact")
     // the spans islands pass partitions by document — a global sort or a
     // cartesian here would be the all-pairs shape the census exists to
-    // avoid. Audit mode: the shipped query localCheckpoints its census
-    // (scoped persist), which would hide the plan behind an ExistingRDD —
-    // lazyPlans returns the full lazy tree instead (the Explain contract).
-    spark.conf.set("spark.graft.lazyPlans", "true")
-    val spans =
-      try plan("m6_repeated_spans")
-      finally spark.conf.unset("spark.graft.lazyPlans")
+    // avoid
+    val spans = plan("m6_repeated_spans")
     assert(spans.contains("hashpartitioning(doc_id"),
       s"spans islands window must partition by doc_id:\n$spans")
     assert(!spans.contains("CartesianProduct"),
@@ -469,11 +480,7 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("round-16: bloom decontamination prefilters in the scan stage, below the verify join") {
-    // audit mode: the sketch literal is driver-built, no actions
-    spark.conf.set("spark.graft.lazyPlans", "true")
-    val p =
-      try plan("m6_bloom_decontaminate")
-      finally spark.conf.unset("spark.graft.lazyPlans")
+    val p = plan("m6_bloom_decontaminate")
     // the probe is Spark's native runtime-filter predicate (codegen'd, no
     // UDF), and it must sit on the JOIN INPUT side — a prefilter that runs
     // after the join would ship the full shingle volume through the
@@ -548,5 +555,51 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
       s"pair keep-best must be a keyed agg, not a window:\n$pc")
     assert(pc.contains("letterboxed"),
       s"the image gate must ride the real decode path:\n$pc")
+  }
+
+  test("shared intermediates are persisted and read from the cache, never recomputed per consumer") {
+    // every operator that reuses an intermediate persists it and returns a
+    // lazy result: each consumer must read the InMemoryRelation, so the
+    // expensive subtree (tokenize, explode, decode) runs once per query.
+    // The count is how many distinct cached frames the plan reads twice
+    // or more.
+    val shared = Seq(
+      "m6_lm_support" -> 1,     // bigram frame: count build + position join
+      "m6_passage_scrub" -> 2,  // base: passages + final join; passages: flood + anti-join
+      "m6_repeated_spans" -> 2, // base: window hashes + final join; wh: flood + runs
+      "m6_span_scrub" -> 2,     // base: window hashes + rebuild; wh: flood + foreign join
+      "m6_postings" -> 1,       // term frame: df count + posting build
+      "m6_release_diff" -> 1,   // release A manifest: diff side + reuse branch
+      "m7_ahash_neardup" -> 1,  // decoded signatures: four pair-search branches
+      "m7_pcm_neardup" -> 1,
+      "m7_video_neardup" -> 1,
+      "m7_keyframe_ahash" -> 1, // hashed keyframes: hubs, star join, chunk path
+      "m7_pair_curation" -> 1)  // pair frame: both gates, side keys, scaffold
+    for ((q, n) <- shared) {
+      val reads = cacheReads(q)
+      assert(reads.count(_ >= 2) >= n,
+        s"$q: expected $n persisted intermediate(s) read at least twice, got reads $reads")
+    }
+  }
+
+  // Lineage recovery: a query whose cached blocks vanish between two
+  // evaluations (what a lost executor does to them) must recompute and
+  // return the same rows. The persisted intermediates above are a cache the
+  // query can always rebuild; an eagerly checkpointed result has no lineage
+  // left and fails with "Checkpoint block … not found".
+  for (q <- Seq("m6_lm_support", "m6_passage_scrub", "m6_repeated_spans",
+      "m6_span_scrub", "m6_postings", "m6_release_diff", "m7_ahash_neardup",
+      "m7_keyframe_ahash")) {
+    test(s"lost blocks: $q recomputes its rows after every cached block is lost") {
+      def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+      val df = SparkEntry.queries(q)(spark, dir)
+      try {
+        val first = rows(df)
+        assert(first.nonEmpty, s"$q: empty result proves nothing")
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+        assert(rows(df) == first, s"$q: rows changed after the cache was lost")
+      } finally spark.catalog.clearCache()
+    }
   }
 }
