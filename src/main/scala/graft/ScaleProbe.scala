@@ -42,10 +42,10 @@ object ScaleProbe {
     Tables.bootstrap(spark)
     Files.createDirectories(Paths.get(out))
 
-    def raw(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def raw(t: String): DataFrame = Tables.parquet(spark, s"$src/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
-      println(s"[scale] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[scale] $t: ${Tables.parquet(spark, s"$out/$t.parquet").count()} rows")
     }
     def replicated(t: String, keyCols: Seq[String], perReplica: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
       (0 until factor).map { i =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -13,7 +14,69 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The engine's one parquet reader. A plain `spark.read.parquet` infers
+    * the schema by running a one-task footer job on every call, even for a
+    * table read a moment ago — and most reads here happen while a query
+    * plan is being built. This reader resolves each table's schema once
+    * per content version (a memo keyed on the paths plus their content
+    * signatures, `DedupStaging.ContentMemo`) and passes it to the read, so
+    * a repeated read launches no job. A table rewritten in place has a new
+    * signature and is inferred again; an absent path is never cached, so a
+    * missing table fails exactly as a plain read does. Connectors' writers
+    * seed the memo for each generation they commit ([[seedSchema]]). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    read(spark, None, paths)
+
+  /** [[parquet]] over partition directories of one table, discovered
+    * against `basePath` (the partition columns come from the directory
+    * names below it). */
+  def parquetFragments(spark: SparkSession, basePath: String,
+      paths: Seq[String]): DataFrame =
+    read(spark, Some(basePath), paths)
+
+  private val schemas =
+    new operators.DedupStaging.ContentMemo[(Seq[String], Option[String]), StructType]
+
+  private def scan(spark: SparkSession, basePath: Option[String],
+      paths: Seq[String], schema: Option[StructType]): DataFrame = {
+    val reader = spark.read.options(basePath.map("basePath" -> _).toMap)
+    schema.fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  private def read(spark: SparkSession, basePath: Option[String],
+      paths: Seq[String]): DataFrame = {
+    var inferred: Option[DataFrame] = None
+    val schema = schemas((paths, basePath), paths) {
+      inferred = Some(scan(spark, basePath, paths, None))
+      inferred.get.schema
+    }
+    inferred.getOrElse(scan(spark, basePath, paths, Some(schema)))
+  }
+
+  /** Seed the memo for a generation a writer just committed from a frame
+    * of schema `written`, partitioned by `partitionCol` if given — so the
+    * first read of a fresh generation launches no inference job either.
+    * Nullability needs no care: a read makes every field nullable, whatever
+    * schema it is given. A partitioned write keeps its partition column in
+    * directory names, and a read puts it last with the type discovery gives
+    * it; so that schema is resolved by a read pinned to the data columns,
+    * whose listing runs on the driver, not as a job. An empty partitioned
+    * write leaves no directory to discover, and a plain read of it fails,
+    * so it stays uncached. */
+  private[graft] def seedSchema(spark: SparkSession, written: StructType,
+      partitionCol: Option[String], paths: Seq[String],
+      basePath: Option[String] = None): Unit = {
+    val schema = partitionCol match {
+      case None => Some(written)
+      case Some(p) =>
+        val data = StructType(written.filterNot(_.name == p))
+        Some(scan(spark, basePath, paths, Some(data)).schema)
+          .filter(_.fieldNames.contains(p))
+    }
+    schema.foreach(schemas.seed((paths, basePath), paths, _))
+  }
 
   /** Session confs + native-function registry every entry point
     * (Verify/Bench/Explain/tests) sets once at bootstrap — not inside table

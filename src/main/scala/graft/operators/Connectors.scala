@@ -186,7 +186,8 @@ object Connectors {
           // the merged slice goes straight into its own generation dir —
           // never an in-place overwrite, so there is no read-vs-write
           // conflict and no window where the target holds partial output
-          merged(current.filter(pruned)).write.partitionBy(p).parquet(s"$targetDir/$gen")
+          val slice = merged(current.filter(pruned))
+          slice.write.partitionBy(p).parquet(s"$targetDir/$gen")
           // fragments actually written (day=..., incl. the null-partition
           // dir) — listed once, driver-side metadata
           val newFrags = listFragments(Paths.get(targetDir, gen))
@@ -194,13 +195,19 @@ object Connectors {
           val mapping = currentMapping(targetDir) ++ newFrags.map(_ -> gen)
           commitManifest(targetDir,
             mapping.toSeq.sorted.map { case (frag, d) => d -> Some(frag) })
+          // every new fragment maps to `gen`: readSnapshot reads exactly
+          // these, sorted, under `gen` as base path
+          Tables.seedSchema(spark, slice.schema, Some(p),
+            newFrags.sorted.map(f => s"$targetDir/$gen/$f"), Some(s"$targetDir/$gen"))
           sweepStale(targetDir, prev)
         case None =>
           val prev = currentRef(targetDir)
           val gen = newGenName()
-          merged(current).write.parquet(s"$targetDir/$gen")
+          val all = merged(current)
+          all.write.parquet(s"$targetDir/$gen")
           requireGenAlive(targetDir, gen)
           commitPointer(targetDir, gen)
+          seedGeneration(spark, targetDir, gen, all)
           sweepStale(targetDir, prev)
       }
     } finally updates.unpersist()
@@ -220,6 +227,7 @@ object Connectors {
     requireGenAlive(targetDir, gen)
     val members = currentMembers(targetDir) :+ (gen -> None)
     commitManifest(targetDir, members)
+    seedGeneration(spark, targetDir, gen, rows)
     sweepStale(targetDir, prev)
   }
 
@@ -268,6 +276,7 @@ object Connectors {
       rows.write.mode("overwrite").parquet(s"$targetDir/$gen")
       requireGenAlive(targetDir, gen)
       commitManifest(targetDir, currentMembers(targetDir) :+ (gen -> None))
+      seedGeneration(spark, targetDir, gen, rows)
       sweepStale(targetDir, prev)
     }
   }
@@ -296,8 +305,16 @@ object Connectors {
     rows.write.parquet(s"$targetDir/$gen")
     requireGenAlive(targetDir, gen)
     commitPointer(targetDir, gen)
+    seedGeneration(spark, targetDir, gen, rows)
     sweepStale(targetDir, prev)
   }
+
+  /** Seed the reader's schema memo (`Tables.seedSchema`) with generation
+    * `gen` of `targetDir`, just committed from `rows`, as a whole-dir read
+    * — the read every snapshot naming `gen` makes of it. */
+  private def seedGeneration(spark: SparkSession, targetDir: String,
+      gen: String, rows: DataFrame, partitionCol: Option[String] = None): Unit =
+    Tables.seedSchema(spark, rows.schema, partitionCol, Seq(s"$targetDir/$gen"))
 
   /** Commit-time backstop against a concurrent writer that broke this
     * writer's build lock (believing it dead) and swept its in-flight
@@ -330,6 +347,7 @@ object Connectors {
     }
     requireGenAlive(targetDir, gen)
     commitPointer(targetDir, gen)
+    seedGeneration(spark, targetDir, gen, snapshot, partitionCol)
     sweepStale(targetDir, prev)
   }
 
@@ -348,10 +366,11 @@ object Connectors {
       xCol: String, yCol: String, files: Int): Unit = {
     val prev = currentRef(targetDir)
     val gen = newGenName()
-    zlayout(readTable(spark, targetDir), xCol, yCol, files)
-      .write.parquet(s"$targetDir/$gen")
+    val laid = zlayout(readTable(spark, targetDir), xCol, yCol, files)
+    laid.write.parquet(s"$targetDir/$gen")
     requireGenAlive(targetDir, gen)
     commitPointer(targetDir, gen)
+    seedGeneration(spark, targetDir, gen, laid)
     sweepStale(targetDir, prev)
   }
 
@@ -415,7 +434,7 @@ object Connectors {
   // Every protocol artifact is underscore-prefixed on purpose: Spark's file
   // listing skips hidden (`_`/`.`) paths, so a crashed merge's orphan
   // generation or half-written manifest is structurally invisible to any
-  // plain `spark.read.parquet(root)` of a pre-protocol table — not just
+  // plain parquet read of a pre-protocol table's root — not just
   // unreferenced, unlistable.
   //
   // Concurrency contract: ONE WRITER per table (the reference's sync loop
@@ -432,7 +451,7 @@ object Connectors {
   /** Read the committed snapshot of a merge/append target. */
   def readTable(spark: SparkSession, targetDir: String): DataFrame =
     currentRef(targetDir) match {
-      case None => spark.read.parquet(targetDir)
+      case None => Tables.parquet(spark, targetDir)
       case Some(ref) => readSnapshot(spark, targetDir, ref)
     }
 
@@ -461,7 +480,7 @@ object Connectors {
       ref: String): DataFrame =
     ref match {
       case gen if !gen.startsWith("_manifest-") =>
-        spark.read.parquet(s"$targetDir/$gen")
+        Tables.parquet(spark, s"$targetDir/$gen")
       case m =>
         val members = readManifest(Paths.get(targetDir, m))
         val reads = members.groupBy(_._1).toSeq.sortBy(_._1).map {
@@ -482,9 +501,8 @@ object Connectors {
                 s"manifest $m of $targetDir mixes whole-dir and " +
                   s"fragment entries for member $relDir — refusing a read " +
                   "that would drop the whole-dir member's rows")
-            if (frags.isEmpty) spark.read.parquet(base)
-            else spark.read.option("basePath", base)
-              .parquet(frags.sorted.map(f => s"$base/$f"): _*)
+            if (frags.isEmpty) Tables.parquet(spark, base)
+            else Tables.parquetFragments(spark, base, frags.sorted.map(f => s"$base/$f"))
         }
         // allowMissingColumns: members appended after a schema widened (or
         // external refs with extra columns) read as null in the gap — the
@@ -905,7 +923,7 @@ object Connectors {
       .write.partitionBy("day").mode("overwrite").parquet(out)
     // read back through the partitioned layout; `day` returns via partition
     // discovery (directory names), value columns via the data files
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .select(col("user_id"), col("day"), col("avg_value"), col("max_value"),
         col("min_value"), col("cnt"))
   }
@@ -1019,7 +1037,7 @@ object Connectors {
     * raw table — the layout must never change an answer, only the bytes
     * touched. */
   def zorderLayout(spark: SparkSession, dir: String): DataFrame =
-    boxRead(spark, dir, spark.read.parquet(zorderTable(spark, dir, files = 64)))
+    boxRead(spark, dir, Tables.parquet(spark, zorderTable(spark, dir, files = 64)))
 
   /** The served 2-dim box read both z-order queries share — ONE block so
     * s19 and s20 cannot drift apart under their shared oracle. */

@@ -72,6 +72,38 @@ object DedupStaging {
     }
   }
 
+  /** A memo of values derived from on-disk content (a corpus count, a
+    * table's parquet schema), one slot per key. A slot is served only
+    * while every path it was derived from still has the [[contentSig]] it
+    * had then, so a table regenerated in place is derived again. A path
+    * with no signature makes the call uncacheable: `compute` runs, and a
+    * read it makes fails with the real missing-table error (r13 ADVICE). */
+  private[graft] final class ContentMemo[K, V] {
+    private val slots = scala.collection.concurrent.TrieMap.empty[K, (Seq[String], V)]
+
+    private def sigs(paths: Seq[String]): Option[Seq[String]] = {
+      val s = paths.map(contentSig)
+      Option.when(s.forall(_.isDefined))(s.flatten)
+    }
+
+    def apply(key: K, paths: Seq[String])(compute: => V): V =
+      sigs(paths) match {
+        case None => compute
+        case Some(s) => slots.get(key) match {
+          case Some((`s`, v)) => v
+          case _ =>
+            val v = compute
+            slots.put(key, (s, v))
+            v
+        }
+      }
+
+    /** Record `value` for the paths' current content — for a writer that
+      * knows what a reader would derive from what it just wrote. */
+    def seed(key: K, paths: Seq[String], value: V): Unit =
+      sigs(paths).foreach(s => slots.put(key, (s, value)))
+  }
+
   /** Content fingerprint of a fixture dir — the staged tables derive from
     * `documents.parquet` (text/dedup family) or `embeddings.parquet` (ANN
     * index family), so the pair of content signatures identifies the

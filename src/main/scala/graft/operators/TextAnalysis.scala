@@ -49,14 +49,10 @@ object TextAnalysis {
     * documents source's content signature (file-or-directory aware); an
     * absent source is uncacheable and recomputes — the r13-ADVICE memo
     * contract. */
-  private val docsCount =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  private val docsCount = new DedupStaging.ContentMemo[String, Long]
   private[operators] def docsN(spark: SparkSession, dir: String): Long =
-    DedupStaging.contentSig(s"$dir/documents.parquet") match {
-      case Some(sig) => docsCount.getOrElseUpdate((dir, sig),
-        Tables.documents(spark, dir).count())
-      case None => Tables.documents(spark, dir).count()
-    }
+    docsCount(dir, Seq(s"$dir/documents.parquet"))(
+      Tables.documents(spark, dir).count())
 
   /** DuckDB fragment for the same k-shingles of a token list `t`. */
   def sqlShingles(t: String, k: Int): String = {

@@ -197,9 +197,8 @@ object StreamingJobs {
     * `kafka.` prefix, making it inert; here it is real). */
   def readEventStream(spark: SparkSession, srcDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(srcDir).schema
     spark.readStream
-      .schema(schema)
+      .schema(Tables.parquet(spark, srcDir).schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
   }
@@ -608,9 +607,7 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val src = stagedDocuments(spark, dir, 2)
     val sink = Files.createTempDirectory("graft-stream-sink-").toString
-    val schema = spark.read.parquet(src).schema
-    val sketchStream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val sketchStream = readEventStream(spark, src)
       .select(explode(TextAnalysis.normTokens(col("text"))).as("term"))
       .select(TextAnalysis.cmsCoords(col("term")).as("p"))
       .select(col("p.d").as("d"), col("p.bucket").as("bucket"))
@@ -826,10 +823,7 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val src = stagedDocuments(spark, dir, 2)
     val sink = Files.createTempDirectory("graft-stream-sink-").toString
-    val schema = spark.read.parquet(src).schema
-    val scored = TextAnalysis.classifyFrame(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src))
+    val scored = TextAnalysis.classifyFrame(readEventStream(spark, src))
     drainUpdate(scored, sink)
     UpsertSink.lastWriteWins(spark, sink, Seq("doc_id"))
   }
@@ -858,9 +852,7 @@ object StreamingJobs {
     val src = stagedDocuments(spark, dir, 3)
     val cat = Connectors.scratchCatalog("graft-stream-index-")
     val post = s"$cat/postings"; val stats = s"$cat/stats"
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -918,9 +910,7 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val src = stagedEmbeddings(spark, dir, 3)
     val cells = s"${Connectors.scratchCatalog("graft-stream-ivf-")}/cells"
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     // the frozen release quantizer, resident for the job's lifetime
     val cents = Similarity.releaseCentroids(spark, dir).persist()
@@ -976,9 +966,7 @@ object StreamingJobs {
     val (post, stats) = TextAnalysis.admittedCatalog(spark, dir)
     val tomb = TextAnalysis.tombstoneDirOf(post)
     val src = stagedForget(spark, dir, 2)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1049,9 +1037,7 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val (sigsT, shT) = Dedup.refDedupCatalog(spark, dir, "graft-stream-dedup-")
     val src = stagedDedupBatch(spark, dir, 3)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     // Reference-side band frame, incrementalized across micro-batches (r20
     // opt round, guide §1.2): the RELEASE part of the catalog is immutable
@@ -1148,9 +1134,7 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-pcm-")
     val src = stagedPcmClips(spark, dir, 3)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1179,7 +1163,7 @@ object StreamingJobs {
     // (r17 ADVICE).
     val sigs = Connectors.readTable(spark, sigT)
     Multimodal.ahashPairs(sigs,
-      Dedup.simhashChunkBits(spark.read.parquet(src).count()))
+      Dedup.simhashChunkBits(Tables.parquet(spark, src).count()))
   }
 
   /** Staged bounded replay of the image corpus (doc_id order) — the
@@ -1207,9 +1191,7 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-ahash-")
     val src = stagedImageClips(spark, dir, 3)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1233,7 +1215,7 @@ object StreamingJobs {
     // corpus-count chunk width, the m4u rationale (r17 ADVICE)
     val sigs = Connectors.readTable(spark, sigT)
     Multimodal.ahashPairs(sigs,
-      Dedup.simhashChunkBits(spark.read.parquet(src).count()))
+      Dedup.simhashChunkBits(Tables.parquet(spark, src).count()))
   }
 
   /** Staged bounded replay of the video corpus (doc_id order) — the
@@ -1262,9 +1244,7 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-video-")
     val src = stagedVideoClips(spark, dir, 3)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1288,7 +1268,7 @@ object StreamingJobs {
     // corpus-count chunk width, the m4u rationale (r17 ADVICE)
     val sigs = Connectors.readTable(spark, sigT)
     Multimodal.ahashPairs(sigs,
-      Dedup.simhashChunkBits(spark.read.parquet(src).count()))
+      Dedup.simhashChunkBits(Tables.parquet(spark, src).count()))
   }
 
   /** Staged bounded replay of the training-corpus ingestion (doc_id order)
@@ -1332,9 +1312,7 @@ object StreamingJobs {
       .filter(col("doc_id") % 97 === 0).select("h").distinct()
     val evidenceT = Connectors.scratchCatalog("graft-stream-decon-") + "/evidence"
     val src = stagedTrainingDocs(spark, dir, 3)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1387,9 +1365,7 @@ object StreamingJobs {
     val cells = Similarity.admittedIvfCells(spark, dir, "graft-stream-annforget-")
     val tomb = Similarity.annTombstoneDirOf(cells)
     val src = stagedAnnForget(spark, dir, 2)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream
@@ -1437,9 +1413,7 @@ object StreamingJobs {
     val (sigsT, shT) = Dedup.refDedupCatalog(spark, dir, "graft-stream-dedupfg-")
     val tombT = Dedup.dedupTombstoneDirOf(sigsT)
     val src = stagedDedupForget(spark, dir, 2)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val stream = readEventStream(spark, src)
     val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     withShufflePartitions(spark, 8) {
       val q = stream.writeStream

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,7 +131,7 @@ object UpsertSink {
     * key. One shuffle on the key — the same shape as W8 latest-per-key. */
   def lastWriteWins(spark: SparkSession, sinkDir: String, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)
-    spark.read.parquet(sinkDir)
+    Tables.parquet(spark, sinkDir)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")
@@ -139,5 +140,5 @@ object UpsertSink {
   /** Union-of-appends view, for append-mode streams where every row is
     * emitted exactly once (dedup, flatMapGroupsWithState). */
   def appended(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("batch_id")
+    Tables.parquet(spark, sinkDir).drop("batch_id")
 }
