@@ -31,19 +31,11 @@ object Dedup {
 
   import Exact.{fold60 => md5Fold60, sqlFold60 => sqlMd5Fold60}
 
-  /** doc_id + distinct 3-shingle set, as raw strings (`sh`). The token array
-    * is projected FIRST, in its own select: the shingle constructor
-    * references its token list many times (size + k element_at per
-    * position), and handing it an inline expression instead of a bound
-    * column re-evaluates that expression per reference in interpreted HOF
-    * eval — the multi-referenced alias blocks CollapseProject, so each
-    * stage evaluates once. */
+  /** doc_id + distinct 3-shingle set, as raw strings (`sh`). */
   private[operators] def withShingles(spark: SparkSession, dir: String): DataFrame =
     Tables.fanout(Tables.documents(spark, dir))
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        array_distinct(shingles(col("toks"), 3)).as("sh"))
+        array_distinct(shingles(tokens(col("text")), 3)).as("sh"))
 
   /** Jaccard over distinct-element arrays by inclusion-exclusion:
     * |A∪B| = |A|+|B|−|A∩B|, so one array_intersect pass replaces
@@ -223,41 +215,30 @@ object Dedup {
   }
 
   /** Per-document 64-bit SimHash signature as two 32-bit halves (`sim_hi`,
-    * `sim_lo`): shingle-hash bit voting — one explode + one wide (64-column)
-    * sum aggregation, map-side combined. The halves come from md5 hex chars
-    * 1-8 / 9-16, so both engines derive identical bits; two 32-bit columns
+    * `sim_lo`): shingle-hash bit voting in ONE map-side pass per document —
+    * the native `graft_simhash64` (graft.functions.SimHash64) takes the
+    * leading 8 md5 bytes of each distinct shingle, counts the ±1 votes per
+    * bit and sets the bits that win, so the build has no explode, no
+    * aggregate and no exchange beyond the fanout (PlanContractSpec guards
+    * that shape). A document with fewer than 3 tokens has no shingle and
+    * yields no row. The halves are md5 hex chars 1-8 / 9-16 of the voting
+    * hashes, so both engines derive identical bits; two 32-bit columns
     * rather than one 64-bit value because bit 63 of a combined signature
     * would need unsigned arithmetic that Java wraps and DuckDB rejects.
     *
     * `simhashSignatures` reads the staged signature table
     * (DedupStaging.simhashSigs); this is the one-time build behind it. */
-  private[operators] def simhashSignaturesBuild(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def simhashSignaturesBuild(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    // hash INSIDE the array, explode after: ONE native digest per shingle
-    // (graft.functions.Md5Long64 — leading 8 digest bytes as a long)
-    // replaces the md5 hex round trip (32-char alloc + two substring parses
-    // per shingle: the hot loop at corpus scale); the halves split off with
-    // codegen'd bit ops afterward. A bare explode(sh) generator lets the
-    // optimizer fuse the whole shingle-constructor tree into Generate,
-    // re-entering interpreted eval per row (measured 5×); a non-trivial
-    // generator over the bound column keeps the stages apart.
-    val hashed = withShingles(spark, dir)
-      .select(col("doc_id"), explode(transform(col("sh"), s =>
-        call_function("graft_md5_long64", s))).as("h64"))
+    // The filter tests the token count, not the shingle array: the
+    // optimizer pushes it below the fanout, where a test on the array
+    // would build every array a second time, in the single scan task.
+    Tables.fanout(Tables.documents(spark, dir).filter(size(tokens(col("text"))) >= 3))
+      .select(col("doc_id"), call_function("graft_simhash64",
+        array_distinct(shingles(tokens(col("text")), 3))).as("sig"))
       .select(col("doc_id"),
-        shiftrightunsigned(col("h64"), 32).as("hi"),
-        col("h64").bitwiseAND(lit(0xFFFFFFFFL)).as("lo"))
-    val voteCols =
-      (0 until 32).map(i =>
-        sum(shiftright(col("hi"), i).bitwiseAND(lit(1L)) * 2 - 1).as(s"b$i")) ++
-      (0 until 32).map(i =>
-        sum(shiftright(col("lo"), i).bitwiseAND(lit(1L)) * 2 - 1).as(s"c$i"))
-    val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val simHi = (0 until 32).map(i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
-    val simLo = (0 until 32).map(i =>
-      when(col(s"c$i") > 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
-    votes.select(col("doc_id"), simHi.as("sim_hi"), simLo.as("sim_lo"))
+        shiftrightunsigned(col("sig"), 32).as("sim_hi"),
+        col("sig").bitwiseAND(lit(0xFFFFFFFFL)).as("sim_lo"))
   }
 
   /** The staged per-document SimHash signature table. */
@@ -354,8 +335,7 @@ object Dedup {
     * staging build, over the increment only; persisted because it feeds
     * both the signature aggregate and the verification join. */
   private[graft] def batchBaseOf(batchDocs: DataFrame): DataFrame = batchDocs
-    .select(col("doc_id"), tokens(col("text")).as("toks"))
-    .select(col("doc_id"), array_distinct(shingles(col("toks"), 3)).as("sh"))
+    .select(col("doc_id"), array_distinct(shingles(tokens(col("text")), 3)).as("sh"))
     .withColumn("hs", array_distinct(transform(col("sh"), s => md5Fold60(s))))
     .drop("sh")
     .persist()
@@ -1116,20 +1096,10 @@ object Dedup {
     val mutated = transform(
       TextAnalysis.normTokens(col("text")),
       (t, i) => when(i % 16 === 0, concat(t, lit("x"))).otherwise(t))
-    // `mutated` materializes as its OWN projection before the shingle
-    // transform — the withShingles/postings discipline, relearned by
-    // measurement a third time (ProfContam, r17): inlined, shingles()'s
-    // element_at(mutated, i+j) references re-evaluate the whole
-    // tokenize+mutate subtree once per element access in interpreted HOF
-    // eval, making per-document cost quadratic in text length. The census
-    // measured the inlined form at 93% of the query's 100×-leg CPU (2461
-    // of 2638 cpu-s); this split is the difference between the operator's
-    // 301× CPU ratio and its scan-class peers.
     Tables.documents(spark, dir)
       .filter(col("doc_id") % 97 === 0)
-      .select((col("doc_id") + 3000000).as("doc_id"), mutated.as("mtoks"))
-      .select(col("doc_id"),
-        array_distinct(shingles(col("mtoks"), 8)).as("sh"))
+      .select((col("doc_id") + 3000000).as("doc_id"),
+        array_distinct(shingles(mutated, 8)).as("sh"))
       .select(col("doc_id"),
         explode(transform(col("sh"), s => md5Fold60(s))).as("h"))
   }

@@ -358,16 +358,12 @@ object DedupStaging {
 
   /** The (doc_id, h) 8-shingle projection over an arbitrary (doc_id, text)
     * frame — shingle8's body, shared with the streaming decontamination
-    * gate's per-micro-batch pass. Three staged projections: canonical
-    * tokens, then shingles, then hash-inside-array + explode. Inlining
-    * normTokens (itself a HOF) into the shingle constructor re-evaluates it
-    * per element_at in interpreted eval — measured 40× on this build
-    * (Dedup.withShingles has the full story). */
+    * gate's per-micro-batch pass: distinct canonical-token shingles, then
+    * hash-inside-array + explode. */
   private[graft] def shingle8Of(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), normTokens(col("text")).as("toks"))
       .select(col("doc_id"),
-        array_distinct(shingles(col("toks"), 8)).as("sh"))
+        array_distinct(shingles(normTokens(col("text")), 8)).as("sh"))
       .select(col("doc_id"),
         explode(transform(col("sh"), s => md5Fold60(s))).as("h"))
 

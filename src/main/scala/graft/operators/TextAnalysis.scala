@@ -34,12 +34,12 @@ object TextAnalysis {
 
   /** Word k-shingles (k consecutive tokens joined by space) — the unit for
     * fingerprinting and near-dup detection. With a small vocabulary,
-    * single-token sets collide on everything; k-gram sequences don't. */
+    * single-token sets collide on everything; k-gram sequences don't.
+    * Empty when `toks` is null or shorter than k. The native
+    * `graft_shingles` expression (graft.functions.Shingles) reads the token
+    * array once per row, so callers may pass an inline expression. */
   def shingles(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      transform(sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", (1 to k).map(j => element_at(toks, i + j)): _*)))
-      .otherwise(array())
+    call_function("graft_shingles", toks, lit(k))
 
   /** Memoized documents cardinality per fixture — the Similarity.corpusN
     * discipline applied to the text corpus: several operators (packShards
@@ -343,25 +343,17 @@ object TextAnalysis {
     * replays it bit-for-bit). Equal fingerprints ⇒ near-identical prefix
     * content; used as a cheap first-pass dedup key.
     *
-    * Plan shape: materialize the shingle array in its own projection, then
-    * hash+min in a second — nesting the shingle constructor inside the hash
-    * transform makes one giant interpreted HOF tree; splitting it lets each
-    * stage evaluate once. The hash itself is the native `graft_fold60`
-    * (digest bytes straight to a long), not hex-string md5: min over fixed-
-    * width longs beats min over 32-char strings, with no per-shingle hex
-    * alloc+parse. `fanout` spreads the per-row digest work across cores
-    * (single-split test file). */
+    * Plan shape: one projection — the native shingle kernel builds the
+    * array once per row and the hash transform walks it. The hash itself is
+    * the native `graft_fold60` (digest bytes straight to a long), not
+    * hex-string md5: min over fixed-width longs beats min over 32-char
+    * strings, with no per-shingle hex alloc+parse. `fanout` spreads the
+    * per-row digest work across cores (single-split test file). */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    // the token array ALSO materializes first (the same discipline one
-    // level down): inlined, shingles()'s element_at(tokens(text), i+j)
-    // re-runs the split per element access — O(k·T) re-tokenizations per
-    // document in interpreted HOF eval (the ProfContam-measured trap)
     Tables.fanout(Tables.documents(spark, dir))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), shingles(col("toks"), 3).as("sh"))
-      .select(col("doc_id"),
-        array_min(transform(col("sh"), s => Exact.fold60(s))).as("fingerprint"))
+      .select(col("doc_id"), array_min(transform(shingles(tokens(col("text")), 3),
+        s => Exact.fold60(s))).as("fingerprint"))
   }
 
   /** M6: repetition-based quality filter — the Gopher/C4 rules that catch
@@ -498,9 +490,8 @@ object TextAnalysis {
     * corpus; the oracle's CTE is identically inner). */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val grams = Tables.fanout(Tables.documents(spark, dir))
-      .select(col("doc_id"), normTokens(col("text")).as("toks"))
       .select(col("doc_id"),
-        explode(array_distinct(shingles(col("toks"), 8))).as("gram"))
+        explode(array_distinct(shingles(normTokens(col("text")), 8))).as("gram"))
     val firstOwner = grams.groupBy(col("gram"))
       .agg(min(col("doc_id")).as("first_doc"))
     val novel = firstOwner.groupBy(col("first_doc")).count()
@@ -992,11 +983,7 @@ object TextAnalysis {
     * semi-join is what makes "every posting row ≤ 50 entries, no skewed
     * reducer" true BY CONSTRUCTION, not by luck. The list is emitted as a
     * comma-joined string, the portable wire form (posting lists ship as
-    * packed arrays, never engine-native nested types). Tokens materialize
-    * as their own projection before the shingle transform — inlining the
-    * normTokens HOF re-evaluates it per element_at in interpreted eval,
-    * the measured-40× trap Dedup.withShingles documents (this operator
-    * re-learned it at 795 CPU-s before the split). Cost class: like the
+    * packed arrays, never engine-native nested types). Cost class: like the
     * m6_stage_base builds, one string-shingling corpus pass per index
     * RELEASE — it cannot reuse the fold-based staged shingle tables
     * because the shipped index keys are the human-readable phrases, not
@@ -1006,9 +993,8 @@ object TextAnalysis {
     // shingleBase pattern): every exploded (doc, term) row is then unique
     // by construction — no corpus-wide distinct() exchange at all
     val dt = Tables.fanout(Tables.documents(spark, dir))
-      .select(col("doc_id"), normTokens(col("text")).as("toks"))
       .select(col("doc_id"),
-        explode(array_distinct(shingles(col("toks"), 3))).as("term"))
+        explode(array_distinct(shingles(normTokens(col("text")), 3))).as("term"))
     def build(d: DataFrame): DataFrame = {
       val sel = d.groupBy("term").agg(count(lit(1)).as("df"))
         .filter(col("df").between(2, 50))
@@ -1020,9 +1006,9 @@ object TextAnalysis {
     }
     // dt is narrow (no exchange to reuse) and feeds BOTH the df count and
     // the posting build — without within-query reuse the shingling pass
-    // (the expensive part; the measured-40× HOF lesson) runs twice, so the
-    // persist is load-bearing. The result stays lazy: the cached blocks are
-    // a recomputable cache, dropped by the caller's per-entry clearCache.
+    // (the expensive part) runs twice, so the persist is load-bearing. The
+    // result stays lazy: the cached blocks are a recomputable cache,
+    // dropped by the caller's per-entry clearCache.
     build(dt.persist())
   }
 
@@ -1270,12 +1256,7 @@ object TextAnalysis {
     val steps = (1 to 8).map { i =>
       w = Dedup.cutLineage(w)
       val top = w
-        // seq's token array materializes before the shingle transform —
-        // the ProfContam-measured discipline; bounded here (a word's
-        // symbol sequence, ≤ ~30 tokens) but the split costs one narrow
-        // projection and removes the per-element re-tokenization entirely
-        .select(col("f"), tokens(col("seq")).as("stoks"))
-        .select(col("f"), explode(shingles(col("stoks"), 2)).as("pr"))
+        .select(col("f"), explode(shingles(tokens(col("seq")), 2)).as("pr"))
         .groupBy("pr").agg(sum("f").as("freq"))
         .orderBy(col("freq").desc, col("pr")).limit(1)
       w = w.crossJoin(broadcast(top.select(col("pr").as("mpr"))))

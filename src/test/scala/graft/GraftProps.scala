@@ -42,6 +42,42 @@ object GraftProps extends Properties("graft") {
       (0 until c).exists(i => ((sig >>> (w * i)) & mask) == ((other >>> (w * i)) & mask))
     }
 
+  // ---- Native shingle and SimHash kernels (graft.functions) ---------------
+  // graft_shingles must equal the higher-order-function formulation it
+  // replaced (kept in FunctionsSpec as the reference; repeated here so the
+  // property stands alone). Both Columns are analyzed once per case and
+  // evaluated on literal input, so no Spark job runs.
+  private def evalColumn(c: org.apache.spark.sql.Column): Seq[String] = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    SparkFixture.session.range(1).select(c).queryExecution.analyzed.expressions.head
+      .eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[ArrayData]
+      .toArray[UTF8String](StringType).map(_.toString).toSeq
+  }
+
+  property("shingles: native graft_shingles == the lambda formulation, k in 1-8") =
+    forAll(Gen.choose(0, 12).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("", "a", "b", "ab", "é", "漢字", "🙂"))),
+      Gen.choose(1, 8)) { (toks, k) =>
+      import org.apache.spark.sql.functions._
+      val t = typedLit(toks)
+      val lambda = when(size(t) >= k,
+        transform(sequence(lit(0), size(t) - k),
+          i => concat_ws(" ", (1 to k).map(j => element_at(t, i + j)): _*)))
+        .otherwise(array())
+      evalColumn(graft.operators.TextAnalysis.shingles(t, k)) == evalColumn(lambda)
+    }
+
+  property("simhash64: the signature does not depend on element order") =
+    forAll(Gen.listOf(Gen.alphaNumStr), Gen.long) { (sh, seed) =>
+      import org.apache.spark.sql.catalyst.util.GenericArrayData
+      import org.apache.spark.unsafe.types.UTF8String
+      def sig(xs: Seq[String]) = graft.functions.SimHash64.of(
+        new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any]))
+      sig(sh) == sig(new scala.util.Random(seed).shuffle(sh))
+    }
+
   // ---- AllPairs prefix filter (Dedup.ngramJaccard) -------------------------
   // The lossless-candidate lemma: under ANY shared total order, two distinct
   // sets with Jaccard >= 0.5 share an element within their first

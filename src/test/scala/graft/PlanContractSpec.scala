@@ -143,6 +143,19 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
       s"final plan must contain exactly one explode:\n$p")
   }
 
+  test("simhash_sigs build: one map-side pass — no explode, no aggregate, only the fanout exchange") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val helper = new AdaptiveSparkPlanHelper {}
+    val p = graft.operators.Dedup.simhashSignaturesBuild(spark, dir).queryExecution.executedPlan
+    def count(f: PartialFunction[SparkPlan, Unit]): Int = helper.collect(p)(f).length
+    assert(count { case _: GenerateExec => } == 0, s"explode is back in the build:\n$p")
+    assert(count { case _: BaseAggregateExec => } == 0, s"an aggregate is back in the build:\n$p")
+    assert(count { case _: Exchange => } == 1, s"expected only the fanout exchange:\n$p")
+  }
+
   test("round-11 operators: windowless keyed-agg shapes, broadcast codebooks") {
     // passage scrub: flood detection and reassembly are keyed aggregations —
     // a WindowExec would mean a posting-list-shaped skew hazard crept in
