@@ -1,4 +1,5 @@
 package graft
+import graft.operators.{DedupStaging, Joins}
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -62,46 +63,25 @@ object Bench {
     // runs always leave it unset → full registry).
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Batch queries first (alphabetical), streaming drains (m4*) last: a
+    // Batch queries first (alphabetical), streaming drains last: a
     // drain leaves RocksDB native state, checkpoint scratch and dozens of
     // micro-batch artifacts in the session, which taxes every later query —
     // measured ~50% inflation on the m6 family when drains precede it. The
     // drains themselves are unaffected by position.
     val selected = SparkEntry.queries.toSeq
-      .sortBy { case (n, _) => (n.startsWith("m4"), n) }
+      .sortBy { case (n, _) => (SparkEntry.drains(n), n) }
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Untimed warm-up: one trivial pass over each table the SELECTED queries
-    // read, plus a small agg/window probe when the events table is in play,
-    // so the first timed query doesn't absorb one-time JVM/codegen warm-up
-    // (classloading, janino, parquet footer caches) that no steady-state
-    // deployment pays per query. Scoped to the selection — a two-query dev
-    // loop doesn't warm ten tables — and missing tables (a custom sf dir)
-    // just skip their pass instead of failing the whole bench.
+    // Untimed warm-up: one trivial pass over each table in the fixture dir,
+    // plus a small agg/window probe over events, so the first timed query
+    // doesn't absorb one-time JVM/codegen warm-up (classloading, janino,
+    // parquet footer caches) that no steady-state deployment pays per
+    // query. A custom sf dir warms whatever tables it holds.
     locally {
       import org.apache.spark.sql.functions._
-      val names = selected.map(_._1)
-      def selectedAny(p: String => Boolean) = names.exists(p)
-      val docFamily = (n: String) => n.startsWith("m6") || n.startsWith("m7") ||
-        n == "m4i_stream_cms" // the doc-stream drain reads documents, not events
-      val needs: Map[String, Boolean] = Map(
-        "documents"  -> selectedAny(docFamily),
-        "embeddings" -> selectedAny(n => n.startsWith("m6_ann") ||
-          n == "m6_cosine_topk" || n.startsWith("m6_embed_")),
-        "events"     -> selectedAny(n => !docFamily(n)),
-        // relational dims/facts: the join family, the SQL mart, the
-        // stream-static enrichment (customer)
-        "customer"   -> selectedAny(n => n.startsWith("j") || n == "m4g_stream_enriched"),
-        "supplier"   -> selectedAny(_.startsWith("j")),
-        "nation"     -> selectedAny(_.startsWith("j")),
-        "region"     -> selectedAny(_.startsWith("j")),
-        "part"       -> selectedAny(_.startsWith("j")),
-        "orders"     -> selectedAny(_.startsWith("j")),
-        "lineitem"   -> selectedAny(n => n.startsWith("j") || n == "m5d_sql_pricing_summary"))
-      def has(t: String) =
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sfDir/$t.parquet"))
-      needs.collect { case (t, true) if has(t) => t }
-        .foreach(t => Tables.load(spark, sfDir, t).count())
-      if (needs("events") && has("events")) {
+      val tables = Option(new java.io.File(sfDir).list()).toSeq.flatten
+        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+      tables.foreach(t => Tables.load(spark, sfDir, t).count())
+      if (tables.contains("events")) {
         Tables.events(spark, sfDir).groupBy("event_type").count()
           .write.format("noop").mode("overwrite").save()
         Tables.events(spark, sfDir).limit(1000)
@@ -129,22 +109,6 @@ object Bench {
       body
       ((System.nanoTime() - w0) / 1e9, (os.getProcessCpuTime - c0) / 1e9)
     }
-    val dedupFamily = Set("m6_ngram_jaccard", "m6_minhash_dedup",
-      "m6_simhash_pairs", "m6_decontaminate", "m6_corpus_build",
-      "m6_incremental_dedup", "m6_incremental_commit", "m6_dup_clusters",
-      "m6_dup_density", "m6_cluster_keep_best", "m6_containment",
-      "m6_source_overlap", "m6_contamination_score", "m6_bpe_encode",
-      "m6_bpe_fertility", "m6_pack_bpe", "m6_bm25_topk", "m6_phrase_search",
-      "m6_rrf_fusion", "m6_dsir_weights", "m6_incremental_index",
-      "m6_rrf_fusion_ann", "m6_index_compact", "m6_index_forget",
-      "m6_index_purge", "m4p_stream_forget", "m6_dedup_forget",
-      "m6_dedup_purge", "m6_dedup_compact", "m4q_stream_dedup_admit",
-      "m4s_stream_dedup_forget", "m6_bloom_decontaminate", "m4t_stream_decon",
-      "m4n_stream_index")
-    val annFamily = Set("m6_ann_ivf", "m6_ann_ivf2", "m6_ivf_stats", "m6_ann_pq",
-      "m6_ann_ivfpq", "m6_ann_ivfpq_rerank", "m6_ann_eval", "m6_rrf_fusion_ann",
-      "m6_incremental_ivf", "m6_ann_forget", "m6_ann_purge", "m6_ann_compact",
-      "m4r_stream_ann_forget", "m4o_stream_ivf")
     // An entry (query or staging build) that throws is reported in the
     // `failed` map (name → exception class) of both stdout lines and left
     // out of every time map and total — timing a failure as a success
@@ -161,45 +125,35 @@ object Bench {
         failed(name) = e.getClass.getName
         None
       }
-    // staging builds are scoped to the selection
-    def staged(name: String)(body: => Unit): Seq[(String, Double, Double)] =
-      entry(name)(body).toSeq
     val selectedNames = selected.map(_._1).toSet
     // stage TEMPERATURE: the same staging entry costs ~seconds cold (first
     // build for this corpus version) and ~nothing warm (committed warehouse
     // tables reused — the designed cross-JVM amortization). The artifact
     // records which one this run measured, so round-over-round totals stay
-    // comparable.
+    // comparable. Staging builds are scoped to the selection.
     val stagingCold = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
+    def stage(name: String, needed: Boolean, ready: => Boolean)(
+        build: => Unit): Seq[(String, Double, Double)] =
+      if (!needed) Seq.empty
+      else { stagingCold(name) = !ready; entry(name)(build).toSeq }
     val staging =
-      (if (selectedNames.exists(dedupFamily)) {
-        stagingCold("m6_stage_base") = !graft.operators.DedupStaging
-          .isStagedFor(sfDir, selectedNames.intersect(dedupFamily))
-        staged("m6_stage_base") {
-          graft.operators.DedupStaging.ensureFor(spark, sfDir,
-            selectedNames.intersect(dedupFamily))
-        }
-      } else Seq.empty) ++
+      stage("m6_stage_base", DedupStaging.stagingFor(selectedNames, ann = false).nonEmpty,
+        DedupStaging.isStagedFor(sfDir, selectedNames)) {
+        DedupStaging.ensureFor(spark, sfDir, selectedNames)
+      } ++
       // the ANN index build (IVF cell table + PQ codebook/codes) is its own
       // release artifact — staged once per corpus version like the text
-      // family, timed separately so search entries measure search alone
-      (if (selectedNames.exists(annFamily)) {
-        stagingCold("m6_stage_ann") = !graft.operators.DedupStaging
-          .isAnnStagedFor(sfDir, selectedNames.intersect(annFamily))
-        staged("m6_stage_ann") {
-          graft.operators.DedupStaging.ensureAnnFor(spark, sfDir,
-            selectedNames.intersect(annFamily))
-        }
-      } else Seq.empty) ++
+      // staging, timed separately so search entries measure search alone
+      stage("m6_stage_ann", DedupStaging.stagingFor(selectedNames, ann = true).nonEmpty,
+        DedupStaging.isAnnStagedFor(sfDir, selectedNames)) {
+        DedupStaging.ensureAnnFor(spark, sfDir, selectedNames)
+      } ++
       // the bucketed-layout DDL behind j5 is the same one-time-cost shape
       // (always cold in a fresh JVM — the in-memory catalog dies with it)
-      (if (selectedNames("j5_bucketed_join")) {
-        stagingCold("j5_stage_buckets") =
-          !graft.operators.Joins.bucketedTablesReady(spark, sfDir)
-        staged("j5_stage_buckets") {
-          graft.operators.Joins.ensureBucketedTables(spark, sfDir)
-        }
-      } else Seq.empty)
+      stage("j5_stage_buckets", selectedNames.exists(Joins.bucketedReaders),
+        Joins.bucketedTablesReady(spark, sfDir)) {
+        Joins.ensureBucketedTables(spark, sfDir)
+      }
     val results = staging ++ selected.flatMap { case (name, fn) =>
       // noop sink: full evaluation of every output column (a bare count()
       // would let Catalyst prune the projections away), zero write cost.
@@ -225,16 +179,13 @@ object Bench {
     val total = results.map(_._2).sum
     val cpuTotal = results.map(_._3).sum
     val coldJson = fmt(stagingCold.toSeq)
-    // Subtotals: the ~10 streaming drains (m4*) are fixed RocksDB/checkpoint
+    // Subtotals: the streaming drains are fixed RocksDB/checkpoint
     // machinery at test scale and carry nearly all the cross-machine jitter
     // (round-7 A/B: 57–62 s for near-identical code), so round-over-round
     // comparison should read batch_total — the number plan changes actually
     // move — with drain_total and staging_total reported alongside.
-    val stagingNames = staging.map(_._1).toSet
-    def subtotal(p: ((String, Double, Double)) => Boolean) =
-      results.filter(p).map(_._2).sum
-    val stagingTotal = subtotal(r => stagingNames(r._1))
-    val drainTotal = subtotal(r => r._1.startsWith("m4") && !stagingNames(r._1))
+    val stagingTotal = staging.map(_._2).sum
+    val drainTotal = results.filter(r => SparkEntry.drains(r._1)).map(_._2).sum
     val batchTotal = total - stagingTotal - drainTotal
     val loadEnd = os.getSystemLoadAverage
     // A recording taken under external load is machine noise, not plan cost:

@@ -40,6 +40,10 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_._1).reduce(_ ++ _)
 
+  /** The entries that run a Structured Streaming drain when invoked,
+    * instead of returning a plannable batch frame. */
+  def drains: Set[String] = graft.streaming.StreamingJobs.queries.keySet
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the driver's weaker
     * rows-only check. */

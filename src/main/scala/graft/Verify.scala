@@ -20,13 +20,19 @@ object Verify {
     // (driver runs leave it unset → full registry).
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    // An entry's previous output is deleted before it runs, so one that
+    // now throws leaves no stale parquet for the oracle compare to pass.
+    val failed = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      val out = new java.io.File(s"$outDir/$name")
+      try {
+        org.apache.commons.io.FileUtils.deleteDirectory(out)
+        fn(spark, sfDir).coalesce(1).write.parquet(out.getPath)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
       finally spark.catalog.clearCache() // drop per-query persist()s
     }
@@ -45,6 +51,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] ${failed.size} entries threw: " +
+      failed.sorted.mkString(", "))
     spark.stop()
   }
 }

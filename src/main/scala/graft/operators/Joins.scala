@@ -189,6 +189,10 @@ object Joins {
         count(lit(1)).as("cnt"))
   }
 
+  /** The entries that read the bucketed tables: Bench stages them as
+    * `j5_stage_buckets` when one of these is selected. */
+  val bucketedReaders: Set[String] = Set("j5_bucketed_join")
+
   /** The one-time bucketed-layout build behind J5 — in production this is
     * the table-creation DDL that pays the join's shuffle once at write time;
     * Bench times it as its own `j5_stage_buckets` entry so the query entry

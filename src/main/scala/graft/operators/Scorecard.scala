@@ -36,6 +36,9 @@ object Scorecard {
     override def finish(b: Counts): Counts = b
     override def bufferEncoder: Encoder[Counts] = Encoders.product[Counts]
     override def outputEncoder: Encoder[Counts] = Encoders.product[Counts]
+    // the plan prints the aggregator by toString; the default carries an
+    // identity hash, which would change every plan dump
+    override def toString: String = "QualityAgg"
   }
 
   /** M1: per-day scorecard through the one-pass Aggregator. */

@@ -64,6 +64,9 @@ def canon(df):
     return cols, rows
 
 fails = []
+for name in sorted(only - set(oracle)):
+    print(f"NOORACLE {name} (named on the command line, not in oracle_sql.json)")
+    fails.append(name)
 for name in sorted(oracle):
     if only and name not in only:
         continue
