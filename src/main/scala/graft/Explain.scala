@@ -15,6 +15,30 @@ object Explain {
   def auditable: Seq[String] =
     SparkEntry.queries.keys.toSeq.filterNot(SparkEntry.drains).sorted
 
+  /** A section that depends only on the plan: expression ids and lambda
+    * variable suffixes are renumbered from 0 in order of first appearance,
+    * and what each run allocates afresh — plan ids, RDD ids, `_gen-*`
+    * generations, `/tmp/graft-*` temp dirs, JVM lambda class names — is
+    * masked, so two dumps of the same code are byte-identical and a diff
+    * of EXPLAINS.md shows plan changes only. */
+  def normalize(plan: String): String = {
+    def renumber(text: String, re: String): String = {
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      re.r.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+    }
+    val masks = Seq(
+      "plan_id=\\d+" -> "plan_id=*",
+      "RDD\\[\\d+\\]" -> "RDD[*]",
+      "_gen-\\d+" -> "_gen-*",
+      "(/tmp/graft-[A-Za-z-]*-)\\d+" -> "$1*",
+      "\\$\\$Lambda[$\\d]*/0x[0-9a-f]+@[0-9a-f]+" -> "\\$\\$Lambda")
+    masks.foldLeft(renumber(renumber(plan, "(#)(\\d+)"),
+        "(lambda \\w+?_)(\\d+)")) {
+      case (text, (re, to)) => text.replaceAll(re, to)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
@@ -37,8 +61,8 @@ object Explain {
       out ++= "one runs its bounded topology instead of returning a plannable\n"
       out ++= "batch frame; StreamingSpec exercises their sink/state plans.\n"
       auditable.foreach { q =>
-        val plan = SparkEntry.queries(q)(spark, sfDir)
-          .queryExecution.explainString(mode)
+        val plan = normalize(SparkEntry.queries(q)(spark, sfDir)
+          .queryExecution.explainString(mode))
         // drop the query's persisted intermediates, as Bench and Verify do
         // per entry, so no later plan reads an earlier query's cache
         spark.catalog.clearCache()

@@ -11,6 +11,7 @@ package graft
 // read-back). A provider A/B (RocksDB vs default) measured noise-level
 // differences, so the breakdown decides whether anything here is movable.
 //   usage: sbt "runMain graft.ProfDrain <sfDir> <m4-query> [m4-query ...]"
+//          (one local core and one shuffle partition per available CPU)
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -20,9 +21,10 @@ object ProfDrain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("m4_stream_window_agg")
+    val cpus = Runtime.getRuntime.availableProcessors.toString
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

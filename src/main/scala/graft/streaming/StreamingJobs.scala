@@ -3,7 +3,6 @@ package graft.streaming
 import graft.Tables
 import graft.operators.WindowAggregates
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import java.nio.file.Files
@@ -58,27 +57,72 @@ object StreamingJobs {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
   }
 
-  /** Run `body` with the session's shuffle parallelism pinned to `n` — the
-    * stateful-operator partition count is fixed by the first micro-batch's
-    * shuffle setting, and each state partition opens its own RocksDB store
-    * per batch. 32 partitions × a handful of micro-batches of test data is
-    * pure constant overhead; production sizing is state volume / executor
-    * count, picked at first deployment (it is frozen into the checkpoint).
-    * The streaming query clones the session conf at `start()`, so the pin
-    * only needs to cover query startup. */
-  private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  /** The one bounded-drain runner: every registered drain and every
+    * `drain*` helper starts its query here — `Trigger.AvailableNow`, the
+    * checkpoint (a fresh temp dir unless the caller owns one, the restart
+    * surface), `foreachBatch(batch)`, start and await. Two rules are applied
+    * at `start()`, both derived from what the runner can observe; the
+    * streaming query clones the session conf at `start()` (and freezes the
+    * state partition count into the checkpoint on its first batch), so the
+    * pins only need to cover startup and the session is restored after.
+    *
+    *  - State partitions follow the cores: `spark.sql.shuffle.partitions`
+    *    is `defaultParallelism`, so every stateful stage runs in one wave.
+    *    Each state partition opens and commits its own RocksDB store per
+    *    micro-batch, so partitions beyond the cores are pure fixed cost
+    *    (8 partitions on 4 cores measured ~1.85 s of `state.commit_ms` per
+    *    drain, 4 partitions ~0.75 s). Production sizing is state volume /
+    *    executor count, picked at first deployment.
+    *  - Update-mode queries run without the trailing no-data micro-batch
+    *    (`spark.sql.streaming.noDataMicroBatches.enabled=false`). Update
+    *    mode emits only the rows a batch changed, so the watermark-only
+    *    batch after the last file can evict state but never changes what
+    *    the sink serves — and each extra micro-batch is ~1 s of fixed cost
+    *    at test scale. The contract this rests on: a `transformWithState`
+    *    processor drained in update mode must not emit from
+    *    `handleExpiredTimer` (the funnel and EMA processors return
+    *    `Iterator.empty`). Append and complete mode keep the batch: in
+    *    append mode it is the one that emits the windows, dedup keys and
+    *    join rows the final watermark closes. */
+  def drain(df: DataFrame, mode: OutputMode,
+      ckpt: String = Files.createTempDirectory("graft-stream-ckpt-").toString)(
+      batch: (DataFrame, Long) => Unit): Unit = {
+    val spark = df.sparkSession
+    val pins = Seq("spark.sql.shuffle.partitions" ->
+        spark.sparkContext.defaultParallelism.toString) ++
+      Option.when(mode == OutputMode.Update)(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    val q =
+      try df.writeStream
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(batch)
+        .start()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    q.awaitTermination()
   }
 
-  /** Stage the events table as n time-ordered parquet files in a fresh temp
-    * dir. Buckets are contiguous event-time ranges written sequentially
-    * (increasing modification time), so the file source replays them as an
-    * in-order stream — same delivery contract as the reference's per-sensor
-    * ordered Kafka partitions (producer.py:227-243). Harness-only code: the
-    * global ntile sort is the staging cost, not part of any query plan. */
+  /** Append-mode admission drain (m4n–m4w): each micro-batch is persisted
+    * and counted once — the row count is both the skip-empty guard and the
+    * generation file clamp — and a non-empty one is handed to `admit` with
+    * its id and row count. */
+  private def drainAdmissions(stream: DataFrame)(
+      admit: (DataFrame, Long, Long) => Unit): Unit =
+    drain(stream, OutputMode.Append) { (batch, batchId) =>
+      batch.persist()
+      try {
+        val nRows = batch.count()
+        if (nRows > 0) admit(batch, batchId, nRows)
+      } finally batch.unpersist()
+    }
+
+  /** Staged replay sources, memoized per (fixture, nFiles, source). */
   private val stagedDirs =
     scala.collection.concurrent.TrieMap.empty[(String, Int, String), String]
 
@@ -147,42 +191,37 @@ object StreamingJobs {
     stageBy(df.filter(col("ts").isNotNull && col("user_id").isNotNull),
       nFiles, Seq(col("ts"), col("event_id")))
 
-  /** Write an `order`-split bounded replay source in ONE Spark job: ntile
-    * assigns each row its file, one shuffle clusters the files, a
-    * within-partition sort restores the replay order inside each file, and
-    * the parts publish under ascending names AND modification times — so
-    * the file stream lists them in exactly the sequential order the old
-    * one-coalesce(1)-write-per-file loop produced (file order is
-    * semantics-bearing for the watermark drains), for nFiles-1 fewer job
-    * round-trips and no persist (r20 opt round, guide §1.2/§2.6). Staging
-    * is harness scaffolding (the "broker"), shared via the memo above. */
+  /** Write an `order`-split bounded replay source: one range shuffle cuts
+    * the rows into `nFiles` contiguous `order` ranges (no single-task global
+    * window), a within-partition sort restores the replay order inside each
+    * range, and each range is written as one file, published as `fNNN` in
+    * range order with ascending modification times. The file source lists
+    * by (mtime, path), so it replays the ranges in order — the same
+    * delivery contract as the reference's per-sensor ordered Kafka
+    * partitions (producer.py:227-243); file order is semantics-bearing for
+    * the watermark drains, and contiguity is all they need (range sizes
+    * follow the partitioner's sample). Staging is harness scaffolding (the
+    * "broker"), not part of any query plan, shared via the memo above. */
   private def stageBy(df: DataFrame, nFiles: Int, order: Seq[Column]): String = {
     import java.nio.file.{Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
     val src = Files.createTempDirectory("graft-stream-src-").toString
-    if (nFiles <= 1) {
-      df.coalesce(1).write.mode("append").parquet(src)
-      return src
-    }
     val build = s"$src-build"
-    df.withColumn("_file", ntile(nFiles).over(Window.orderBy(order: _*)))
-      .repartition(nFiles, col("_file"))
-      .sortWithinPartitions(col("_file") +: order: _*)
-      .write.partitionBy("_file").parquet(build)
-    val t0 = System.currentTimeMillis() - nFiles * 1000L
-    (1 to nFiles).foreach { i =>
-      val parts = Files.list(Paths.get(build, s"_file=$i"))
-      val files =
-        try parts.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-")).toSeq
-          .sortBy(_.getFileName.toString)
-        finally parts.close()
-      files.zipWithIndex.foreach { case (f, j) =>
-        val dst = Paths.get(src, f"f$i%03d-$j.parquet")
-        Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
-      }
+    df.repartitionByRange(nFiles, order: _*).sortWithinPartitions(order: _*)
+      .write.parquet(build)
+    // part file names carry the partition index, so name order is range order
+    val listing = Files.list(Paths.get(build))
+    val parts =
+      try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+        .sortBy(_.getFileName.toString)
+      finally listing.close()
+    val t0 = System.currentTimeMillis() - parts.size * 1000L
+    parts.zipWithIndex.foreach { case (f, i) =>
+      val dst = Paths.get(src, f"f${i + 1}%03d.parquet")
+      Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
     }
     val walk = Files.walk(Paths.get(build))
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -209,10 +248,9 @@ object StreamingJobs {
     WindowAggregates.aggregateWindows(stream.withWatermark("ts", "1 minute"))
 
   /** Drain a bounded stream to completion through update mode + the
-    * key-upsert sink; returns the sink dir. */
+    * key-upsert sink (a fresh checkpoint). */
   def drainUpdate(df: DataFrame, sinkDir: String): Unit =
-    drainUpdate(df, sinkDir,
-      Files.createTempDirectory("graft-stream-ckpt-").toString)
+    drain(df, OutputMode.Update)(UpsertSink.appendBatch(sinkDir) _)
 
   /** Same, against a CALLER-OWNED checkpoint dir — the restart surface: a
     * later call with the same checkpoint resumes offsets, watermark and
@@ -220,43 +258,17 @@ object StreamingJobs {
     * exactly-once recovery leg; StreamingSpec kills and resumes through
     * it). */
   def drainUpdate(df: DataFrame, sinkDir: String, ckpt: String): Unit =
-    withShufflePartitions(df.sparkSession, 8) {
-      val q = df.writeStream
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(UpsertSink.appendBatch(sinkDir) _)
-        .start()
-      q.awaitTermination()
-    }
+    drain(df, OutputMode.Update, ckpt)(UpsertSink.appendBatch(sinkDir) _)
 
   /** Drain a complete-mode bounded stream (session windows reject update
     * mode; complete re-emits the whole session state each micro-batch, and
     * the last-write-wins view keeps each key's final version). */
   def drainComplete(df: DataFrame, sinkDir: String): Unit =
-    withShufflePartitions(df.sparkSession, 8) {
-      val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-      val q = df.writeStream
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(UpsertSink.appendBatch(sinkDir) _)
-        .start()
-      q.awaitTermination()
-    }
+    drain(df, OutputMode.Complete)(UpsertSink.appendBatch(sinkDir) _)
 
   /** Drain an append-mode bounded stream (dedup / stateful classify). */
   def drainAppend(df: DataFrame, sinkDir: String): Unit =
-    withShufflePartitions(df.sparkSession, 8) {
-      val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-      val q = df.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(UpsertSink.appendBatch(sinkDir) _)
-        .start()
-      q.awaitTermination()
-    }
+    drain(df, OutputMode.Append)(UpsertSink.appendBatch(sinkDir) _)
 
   /** Continuous production form (reference main, streaming_job.py:733-767):
     * 10 s processing-time trigger, checkpointed, graceful shutdown via
@@ -852,36 +864,18 @@ object StreamingJobs {
     val src = stagedDocuments(spark, dir, 3)
     val cat = Connectors.scratchCatalog("graft-stream-index-")
     val post = s"$cat/postings"; val stats = s"$cat/stats"
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: row count = skip-empty guard + file clamp
-            // (the old shape paid a separate isEmpty job, r20 opt round)
-            val nRows = batch.count()
-            if (nRows > 0) {
-              val delta = TextAnalysis.bm25IndexOf(
-                batch.select(col("doc_id"),
-                  TextAnalysis.normTokens(col("text")).as("toks"))).persist()
-              // posting and stats tables append independently (single-writer
-              // is per-table) — overlap the commits, guide §2.6
-              try Connectors.commitInParallel(Seq(
-                () => Connectors.appendKeyed(spark, post,
-                  delta.coalesce(Connectors.deltaFiles(nRows)), s"b$batchId"),
-                () => Connectors.appendKeyed(spark, stats,
-                  TextAnalysis.memberStatsOf(delta), s"b$batchId")))
-              finally delta.unpersist()
-            }
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      val delta = TextAnalysis.bm25IndexOf(
+        batch.select(col("doc_id"),
+          TextAnalysis.normTokens(col("text")).as("toks"))).persist()
+      // posting and stats tables append independently (single-writer
+      // is per-table) — overlap the commits, guide §2.6
+      try Connectors.commitInParallel(Seq(
+        () => Connectors.appendKeyed(spark, post,
+          delta.coalesce(Connectors.deltaFiles(nRows)), s"b$batchId"),
+        () => Connectors.appendKeyed(spark, stats,
+          TextAnalysis.memberStatsOf(delta), s"b$batchId")))
+      finally delta.unpersist()
     }
     TextAnalysis.bm25CatalogSearch(spark, post, stats)
   }
@@ -910,29 +904,13 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val src = stagedEmbeddings(spark, dir, 3)
     val cells = s"${Connectors.scratchCatalog("graft-stream-ivf-")}/cells"
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     // the frozen release quantizer, resident for the job's lifetime
     val cents = Similarity.releaseCentroids(spark, dir).persist()
-    try withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: row count = skip-empty guard + file clamp
-            val nRows = batch.count()
-            if (nRows > 0)
-              Connectors.appendKeyed(spark, cells,
-                Similarity.assignToCells(Similarity.withVecNorm(spark, batch), cents)
-                  .coalesce(Connectors.deltaFiles(nRows)),
-                s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      Connectors.appendKeyed(spark, cells,
+        Similarity.assignToCells(Similarity.withVecNorm(spark, batch), cents)
+          .coalesce(Connectors.deltaFiles(nRows)),
+        s"b$batchId")
     } finally cents.unpersist()
     Similarity.ivfCatalogSearch(spark, dir, cells)
   }
@@ -966,30 +944,17 @@ object StreamingJobs {
     val (post, stats) = TextAnalysis.admittedCatalog(spark, dir)
     val tomb = TextAnalysis.tombstoneDirOf(post)
     val src = stagedForget(spark, dir, 2)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try if (!batch.isEmpty) {
-            // tombstone and stats tables append independently (single-writer
-            // is per-table) — overlap the commits, guide §2.6
-            Connectors.commitInParallel(Seq(
-              () => Connectors.appendKeyed(spark, tomb,
-                batch.select("doc_id").coalesce(1), s"b$batchId"),
-              () => Connectors.appendKeyed(spark, stats,
-                batch.filter(col("n_tokens") > 0)
-                  .agg((-count(lit(1))).as("n_docs"),
-                    (-coalesce(sum(col("n_tokens")), lit(0L))).as("tot_tokens")),
-                s"b$batchId")))
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+      // tombstone and stats tables append independently (single-writer
+      // is per-table) — overlap the commits, guide §2.6
+      Connectors.commitInParallel(Seq(
+        () => Connectors.appendKeyed(spark, tomb,
+          batch.select("doc_id").coalesce(1), s"b$batchId"),
+        () => Connectors.appendKeyed(spark, stats,
+          batch.filter(col("n_tokens") > 0)
+            .agg((-count(lit(1))).as("n_docs"),
+              (-coalesce(sum(col("n_tokens")), lit(0L))).as("tot_tokens")),
+          s"b$batchId")))
     }
     TextAnalysis.bm25CatalogSearch(spark, post, stats, Some(tomb))
       .withColumn("from_batch", col("doc_id") >= 3000000L)
@@ -1037,8 +1002,6 @@ object StreamingJobs {
     graft.functions.GraftFunctions.register(spark)
     val (sigsT, shT) = Dedup.refDedupCatalog(spark, dir, "graft-stream-dedup-")
     val src = stagedDedupBatch(spark, dir, 3)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
     // Reference-side band frame, incrementalized across micro-batches (r20
     // opt round, guide §1.2): the RELEASE part of the catalog is immutable
     // for the stream's lifetime, so its scan+explode is derived once and
@@ -1050,54 +1013,37 @@ object StreamingJobs {
     val baseMembers = Connectors.memberDataDirs(sigsT).toSet
     val releaseBands = Dedup.catSigBandsOf(spark,
       Connectors.memberDataDirs(sigsT)).persist()
-    try withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: the row count is both the skip-empty guard
-            // and the generation file clamp (the old shape paid a separate
-            // isEmpty job before the count, r20 opt round)
-            val nRows = batch.count()
-            if (nRows > 0) {
-              val base = Dedup.batchBaseOf(batch) // persists internally
-              try {
-                // the batch signature frame feeds the decision bands AND the
-                // signature commit — persist scoped so the minhash aggregate
-                // runs once per micro-batch, the admittedDedupCatalog
-                // discipline (r19 opt round)
-                val sigs = Dedup.sigsOf(base).persist()
-                val deltaDirs = Connectors.memberDataDirs(sigsT)
-                  .filterNot(baseMembers)
-                val refBands =
-                  if (deltaDirs.isEmpty) releaseBands
-                  else releaseBands.unionAll(Dedup.catSigBandsOf(spark, deltaDirs))
-                val admitted = Dedup.admissionDecisions(base,
-                    Dedup.catSigsOf(spark, sigsT), Dedup.catShinglesOf(spark, shT),
-                    Some(sigs), Some(refBands))
-                  .filter(col("admitted")).select(col("new_id").as("doc_id"))
-                  .persist()
-                try {
-                  val nFiles = Connectors.deltaFiles(nRows)
-                  // the two catalog tables append independently (single-writer
-                  // is per-table) — overlap the commits, guide §2.6
-                  Connectors.commitInParallel(Seq(
-                    () => Connectors.appendKeyed(spark, sigsT,
-                      sigs.join(admitted, Seq("doc_id"))
-                        .coalesce(nFiles), s"b$batchId"),
-                    () => Connectors.appendKeyed(spark, shT,
-                      base.join(admitted, Seq("doc_id")).coalesce(nFiles),
-                      s"b$batchId")))
-                } finally { admitted.unpersist(); sigs.unpersist() }
-              } finally base.unpersist()
-            }
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      val base = Dedup.batchBaseOf(batch) // persists internally
+      try {
+        // the batch signature frame feeds the decision bands AND the
+        // signature commit — persist scoped so the minhash aggregate
+        // runs once per micro-batch, the admittedDedupCatalog
+        // discipline (r19 opt round)
+        val sigs = Dedup.sigsOf(base).persist()
+        val deltaDirs = Connectors.memberDataDirs(sigsT)
+          .filterNot(baseMembers)
+        val refBands =
+          if (deltaDirs.isEmpty) releaseBands
+          else releaseBands.unionAll(Dedup.catSigBandsOf(spark, deltaDirs))
+        val admitted = Dedup.admissionDecisions(base,
+            Dedup.catSigsOf(spark, sigsT), Dedup.catShinglesOf(spark, shT),
+            Some(sigs), Some(refBands))
+          .filter(col("admitted")).select(col("new_id").as("doc_id"))
+          .persist()
+        try {
+          val nFiles = Connectors.deltaFiles(nRows)
+          // the two catalog tables append independently (single-writer
+          // is per-table) — overlap the commits, guide §2.6
+          Connectors.commitInParallel(Seq(
+            () => Connectors.appendKeyed(spark, sigsT,
+              sigs.join(admitted, Seq("doc_id"))
+                .coalesce(nFiles), s"b$batchId"),
+            () => Connectors.appendKeyed(spark, shT,
+              base.join(admitted, Seq("doc_id")).coalesce(nFiles),
+              s"b$batchId")))
+        } finally { admitted.unpersist(); sigs.unpersist() }
+      } finally base.unpersist()
     } finally releaseBands.unpersist()
     Dedup.catalogDecisions(spark, dir, sigsT, shT)
   }
@@ -1134,26 +1080,10 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-pcm-")
     val src = stagedPcmClips(spark, dir, 3)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: row count = skip-empty guard + file clamp
-            val nRows = batch.count()
-            if (nRows > 0)
-              Connectors.appendKeyed(spark, sigT,
-                Multimodal.pcmSigOf(spark, batch)
-                  .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      Connectors.appendKeyed(spark, sigT,
+        Multimodal.pcmSigOf(spark, batch)
+          .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
     }
     // chunk width derives from the CORPUS count (the staged replay's row
     // count), exactly as the batch operator and the shared oracle derive it
@@ -1191,26 +1121,10 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-ahash-")
     val src = stagedImageClips(spark, dir, 3)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: row count = skip-empty guard + file clamp
-            val nRows = batch.count()
-            if (nRows > 0)
-              Connectors.appendKeyed(spark, sigT,
-                Multimodal.ahashHashedOf(spark, batch)
-                  .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      Connectors.appendKeyed(spark, sigT,
+        Multimodal.ahashHashedOf(spark, batch)
+          .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
     }
     // corpus-count chunk width, the m4u rationale (r17 ADVICE)
     val sigs = Connectors.readTable(spark, sigT)
@@ -1244,26 +1158,10 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-video-")
     val src = stagedVideoClips(spark, dir, 3)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try {
-            // one probe action: row count = skip-empty guard + file clamp
-            val nRows = batch.count()
-            if (nRows > 0)
-              Connectors.appendKeyed(spark, sigT,
-                Multimodal.videoSigOf(spark, batch)
-                  .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+      Connectors.appendKeyed(spark, sigT,
+        Multimodal.videoSigOf(spark, batch)
+          .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
     }
     // corpus-count chunk width, the m4u rationale (r17 ADVICE)
     val sigs = Connectors.readTable(spark, sigT)
@@ -1312,27 +1210,14 @@ object StreamingJobs {
       .filter(col("doc_id") % 97 === 0).select("h").distinct()
     val evidenceT = Connectors.scratchCatalog("graft-stream-decon-") + "/evidence"
     val src = stagedTrainingDocs(spark, dir, 3)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try if (!batch.isEmpty) {
-            val flagged = DedupStaging.shingle8Of(batch)
-              .filter(call_function("graft_bloom_might_contain",
-                lit(sketch), col("h")))
-              .join(heldout, Seq("h"))
-              .groupBy("doc_id").agg(countDistinct(col("h")).as("n_shared"))
-            Connectors.appendKeyed(spark, evidenceT,
-              flagged.coalesce(1), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+      val flagged = DedupStaging.shingle8Of(batch)
+        .filter(call_function("graft_bloom_might_contain",
+          lit(sketch), col("h")))
+        .join(heldout, Seq("h"))
+        .groupBy("doc_id").agg(countDistinct(col("h")).as("n_shared"))
+      Connectors.appendKeyed(spark, evidenceT,
+        flagged.coalesce(1), s"b$batchId")
     }
     Connectors.readTable(spark, evidenceT).select("doc_id", "n_shared")
   }
@@ -1365,22 +1250,9 @@ object StreamingJobs {
     val cells = Similarity.admittedIvfCells(spark, dir, "graft-stream-annforget-")
     val tomb = Similarity.annTombstoneDirOf(cells)
     val src = stagedAnnForget(spark, dir, 2)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try if (!batch.isEmpty) {
-            Connectors.appendKeyed(spark, tomb,
-              batch.select("vec_id").coalesce(1), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+      Connectors.appendKeyed(spark, tomb,
+        batch.select("vec_id").coalesce(1), s"b$batchId")
     }
     Similarity.withFromBatch(spark, dir,
       Similarity.ivfCatalogSearch(spark, dir, cells, Some(tomb)))
@@ -1413,22 +1285,9 @@ object StreamingJobs {
     val (sigsT, shT) = Dedup.refDedupCatalog(spark, dir, "graft-stream-dedupfg-")
     val tombT = Dedup.dedupTombstoneDirOf(sigsT)
     val src = stagedDedupForget(spark, dir, 2)
-    val stream = readEventStream(spark, src)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-    withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.persist()
-          try if (!batch.isEmpty) {
-            Connectors.appendKeyed(spark, tombT,
-              batch.select("doc_id").coalesce(1), s"b$batchId")
-          } finally batch.unpersist()
-        }
-        .start()
-      q.awaitTermination()
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+      Connectors.appendKeyed(spark, tombT,
+        batch.select("doc_id").coalesce(1), s"b$batchId")
     }
     Dedup.forgetDecisions(spark, dir, sigsT, shT, tombT)
   }
