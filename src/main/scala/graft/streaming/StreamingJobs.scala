@@ -66,14 +66,17 @@ object StreamingJobs {
     * state partition count into the checkpoint on its first batch), so the
     * pins only need to cover startup and the session is restored after.
     *
-    *  - State partitions follow the cores: `spark.sql.shuffle.partitions`
-    *    is `defaultParallelism`, so every stateful stage runs in one wave.
+    *  - State partitions follow the cores, capped at 8:
+    *    `spark.sql.shuffle.partitions` is `min(defaultParallelism, 8)`.
     *    Each state partition opens and commits its own RocksDB store per
     *    micro-batch, so partitions beyond the cores are pure fixed cost
     *    (8 partitions on 4 cores measured ~1.85 s of `state.commit_ms` per
-    *    drain, 4 partitions ~0.75 s). Production sizing is state volume /
-    *    executor count, picked at first deployment.
-    *  - Update-mode queries run without the trailing no-data micro-batch
+    *    drain, 4 partitions ~0.75 s). The cap holds hosts above 8 cores at
+    *    8 stores per micro-batch: each store is fixed cost at test scale,
+    *    and a larger count was never measured to help. Production sizing
+    *    is state volume / executor count, picked at first deployment.
+    *  - Update-mode queries on a runner-owned checkpoint run without the
+    *    trailing no-data micro-batch
     *    (`spark.sql.streaming.noDataMicroBatches.enabled=false`). Update
     *    mode emits only the rows a batch changed, so the watermark-only
     *    batch after the last file can evict state but never changes what
@@ -81,16 +84,19 @@ object StreamingJobs {
     *    at test scale. The contract this rests on: a `transformWithState`
     *    processor drained in update mode must not emit from
     *    `handleExpiredTimer` (the funnel and EMA processors return
-    *    `Iterator.empty`). Append and complete mode keep the batch: in
-    *    append mode it is the one that emits the windows, dedup keys and
-    *    join rows the final watermark closes. */
-  def drain(df: DataFrame, mode: OutputMode,
-      ckpt: String = Files.createTempDirectory("graft-stream-ckpt-").toString)(
+    *    `Iterator.empty`). A caller-owned checkpoint keeps the batch: a
+    *    later run resumes from it, and Spark records a batch's watermark in
+    *    the next batch's offset log, so without it the resumed run would
+    *    start one watermark behind, with state that was never evicted.
+    *    Append and complete mode keep it too: in append mode it is the one
+    *    that emits the windows, dedup keys and join rows the final
+    *    watermark closes. */
+  def drain(df: DataFrame, mode: OutputMode, ckpt: Option[String] = None)(
       batch: (DataFrame, Long) => Unit): Unit = {
     val spark = df.sparkSession
     val pins = Seq("spark.sql.shuffle.partitions" ->
-        spark.sparkContext.defaultParallelism.toString) ++
-      Option.when(mode == OutputMode.Update)(
+        math.min(spark.sparkContext.defaultParallelism, 8).toString) ++
+      Option.when(mode == OutputMode.Update && ckpt.isEmpty)(
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
     pins.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -98,7 +104,8 @@ object StreamingJobs {
       try df.writeStream
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation",
+          ckpt.getOrElse(Files.createTempDirectory("graft-stream-ckpt-").toString))
         .foreachBatch(batch)
         .start()
       finally prev.foreach {
@@ -109,17 +116,15 @@ object StreamingJobs {
   }
 
   /** Append-mode admission drain (m4n–m4w): each micro-batch is persisted
-    * and counted once — the row count is both the skip-empty guard and the
-    * generation file clamp — and a non-empty one is handed to `admit` with
-    * its id and row count. */
+    * for the body's reads and handed to `admit` with its id. The admission
+    * streams hold no stateful operator, so Spark schedules no no-data
+    * batch for them: every micro-batch carries one staged file's rows. */
   private def drainAdmissions(stream: DataFrame)(
-      admit: (DataFrame, Long, Long) => Unit): Unit =
+      admit: (DataFrame, Long) => Unit): Unit =
     drain(stream, OutputMode.Append) { (batch, batchId) =>
       batch.persist()
-      try {
-        val nRows = batch.count()
-        if (nRows > 0) admit(batch, batchId, nRows)
-      } finally batch.unpersist()
+      try admit(batch, batchId)
+      finally batch.unpersist()
     }
 
   /** Staged replay sources, memoized per (fixture, nFiles, source). */
@@ -248,7 +253,7 @@ object StreamingJobs {
     WindowAggregates.aggregateWindows(stream.withWatermark("ts", "1 minute"))
 
   /** Drain a bounded stream to completion through update mode + the
-    * key-upsert sink (a fresh checkpoint). */
+    * key-upsert sink (a fresh checkpoint, no trailing no-data batch). */
   def drainUpdate(df: DataFrame, sinkDir: String): Unit =
     drain(df, OutputMode.Update)(UpsertSink.appendBatch(sinkDir) _)
 
@@ -256,9 +261,10 @@ object StreamingJobs {
     * later call with the same checkpoint resumes offsets, watermark and
     * operator state from where the previous incarnation stopped (the
     * exactly-once recovery leg; StreamingSpec kills and resumes through
-    * it). */
+    * it). The trailing no-data batch runs here, so the checkpoint records
+    * the final watermark and evicted state (see `drain`). */
   def drainUpdate(df: DataFrame, sinkDir: String, ckpt: String): Unit =
-    drain(df, OutputMode.Update, ckpt)(UpsertSink.appendBatch(sinkDir) _)
+    drain(df, OutputMode.Update, Some(ckpt))(UpsertSink.appendBatch(sinkDir) _)
 
   /** Drain a complete-mode bounded stream (session windows reject update
     * mode; complete re-emits the whole session state each micro-batch, and
@@ -864,7 +870,8 @@ object StreamingJobs {
     val src = stagedDocuments(spark, dir, 3)
     val cat = Connectors.scratchCatalog("graft-stream-index-")
     val post = s"$cat/postings"; val stats = s"$cat/stats"
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       val delta = TextAnalysis.bm25IndexOf(
         batch.select(col("doc_id"),
           TextAnalysis.normTokens(col("text")).as("toks"))).persist()
@@ -906,7 +913,8 @@ object StreamingJobs {
     val cells = s"${Connectors.scratchCatalog("graft-stream-ivf-")}/cells"
     // the frozen release quantizer, resident for the job's lifetime
     val cents = Similarity.releaseCentroids(spark, dir).persist()
-    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       Connectors.appendKeyed(spark, cells,
         Similarity.assignToCells(Similarity.withVecNorm(spark, batch), cents)
           .coalesce(Connectors.deltaFiles(nRows)),
@@ -944,7 +952,7 @@ object StreamingJobs {
     val (post, stats) = TextAnalysis.admittedCatalog(spark, dir)
     val tomb = TextAnalysis.tombstoneDirOf(post)
     val src = stagedForget(spark, dir, 2)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
       // tombstone and stats tables append independently (single-writer
       // is per-table) — overlap the commits, guide §2.6
       Connectors.commitInParallel(Seq(
@@ -1013,7 +1021,8 @@ object StreamingJobs {
     val baseMembers = Connectors.memberDataDirs(sigsT).toSet
     val releaseBands = Dedup.catSigBandsOf(spark,
       Connectors.memberDataDirs(sigsT)).persist()
-    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    try drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       val base = Dedup.batchBaseOf(batch) // persists internally
       try {
         // the batch signature frame feeds the decision bands AND the
@@ -1080,7 +1089,8 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-pcm-")
     val src = stagedPcmClips(spark, dir, 3)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       Connectors.appendKeyed(spark, sigT,
         Multimodal.pcmSigOf(spark, batch)
           .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
@@ -1121,7 +1131,8 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-ahash-")
     val src = stagedImageClips(spark, dir, 3)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       Connectors.appendKeyed(spark, sigT,
         Multimodal.ahashHashedOf(spark, batch)
           .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
@@ -1158,7 +1169,8 @@ object StreamingJobs {
     configureStreaming(spark)
     val sigT = Connectors.scratchCatalog("graft-stream-video-")
     val src = stagedVideoClips(spark, dir, 3)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, nRows) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
+      val nRows = batch.count()
       Connectors.appendKeyed(spark, sigT,
         Multimodal.videoSigOf(spark, batch)
           .coalesce(Connectors.deltaFiles(nRows)), s"b$batchId")
@@ -1210,7 +1222,7 @@ object StreamingJobs {
       .filter(col("doc_id") % 97 === 0).select("h").distinct()
     val evidenceT = Connectors.scratchCatalog("graft-stream-decon-") + "/evidence"
     val src = stagedTrainingDocs(spark, dir, 3)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
       val flagged = DedupStaging.shingle8Of(batch)
         .filter(call_function("graft_bloom_might_contain",
           lit(sketch), col("h")))
@@ -1250,7 +1262,7 @@ object StreamingJobs {
     val cells = Similarity.admittedIvfCells(spark, dir, "graft-stream-annforget-")
     val tomb = Similarity.annTombstoneDirOf(cells)
     val src = stagedAnnForget(spark, dir, 2)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
       Connectors.appendKeyed(spark, tomb,
         batch.select("vec_id").coalesce(1), s"b$batchId")
     }
@@ -1285,7 +1297,7 @@ object StreamingJobs {
     val (sigsT, shT) = Dedup.refDedupCatalog(spark, dir, "graft-stream-dedupfg-")
     val tombT = Dedup.dedupTombstoneDirOf(sigsT)
     val src = stagedDedupForget(spark, dir, 2)
-    drainAdmissions(readEventStream(spark, src)) { (batch, batchId, _) =>
+    drainAdmissions(readEventStream(spark, src)) { (batch, batchId) =>
       Connectors.appendKeyed(spark, tombT,
         batch.select("doc_id").coalesce(1), s"b$batchId")
     }

@@ -16,8 +16,10 @@ import java.io.File
 
 /** The drain runner's contract: how a bounded replay source is staged
   * (contiguous, ordered, one file per range, no single-task window) and
-  * how many micro-batches a drain runs (update mode: one per file; append
-  * mode keeps the watermark-only batch that flushes closed state). */
+  * how many micro-batches a drain runs (update mode on a throwaway
+  * checkpoint: one per file; a caller-owned checkpoint and append mode
+  * keep the watermark-only batch; the stateless admission drains run no
+  * empty batch). */
 class DrainRunnerSpec extends AnyFunSuite with SparkFixture {
   private val fixture = "/root/testdata/sf0.001"
 
@@ -113,6 +115,33 @@ class DrainRunnerSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.toString).sorted
     assert(drained.sameElements(twin), "update drain diverged from its batch twin")
   }
+
+  test("a drainUpdate on a caller-owned checkpoint keeps its trailing no-data batch") {
+    StreamingJobs.configureStreaming(spark)
+    val src = StreamingJobs.stagedEvents(spark, fixture, 2)
+    val sink = java.nio.file.Files.createTempDirectory("runner-own-sink-").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("runner-own-ckpt-").toString
+    val batches = batchesOf(StreamingJobs.drainUpdate(
+      StreamingJobs.streamWindowAgg(StreamingJobs.readEventStream(spark, src)), sink, ckpt))
+    // the checkpoint outlives the call, so it must record the final watermark
+    assert(batches.size == 3 && batches.last.numInputRows == 0,
+      s"expected 2 data batches + 1 no-data batch: $batches")
+  }
+
+  /** The admission drains whose bodies never count their batch (m4p, m4r,
+    * m4s, m4t), with the number of files each stages. */
+  private val uncountedAdmissions: Seq[(String, String => DataFrame, Int)] = Seq(
+    ("m4p", StreamingJobs.streamForgetQuery(spark, _), 2),
+    ("m4r", StreamingJobs.streamAnnForgetQuery(spark, _), 2),
+    ("m4s", StreamingJobs.streamDedupForgetQuery(spark, _), 2),
+    ("m4t", StreamingJobs.streamDeconQuery(spark, _), 3))
+
+  for ((name, query, nFiles) <- uncountedAdmissions)
+    test(s"admission drain $name runs one micro-batch per staged file, none empty") {
+      val batches = batchesOf(query(fixture))
+      assert(batches.size == nFiles && batches.forall(_.numInputRows > 0),
+        s"expected $nFiles non-empty micro-batches: $batches")
+    }
 
   test("an append-mode drain keeps its final no-data batch and serves every closed window and key") {
     StreamingJobs.configureStreaming(spark)
