@@ -18,7 +18,9 @@ object Explain {
   /** A section that depends only on the plan: expression ids and lambda
     * variable suffixes are renumbered from 0 in order of first appearance,
     * and what each run allocates afresh — plan ids, RDD ids, `_gen-*`
-    * generations, `/tmp/graft-*` temp dirs, JVM lambda class names — is
+    * generations, `/tmp/graft-*` temp dirs, the staging warehouse's fixture
+    * fingerprint (it follows the fixture files' mtimes), JVM lambda class
+    * names — is
     * masked, so two dumps of the same code are byte-identical and a diff
     * of EXPLAINS.md shows plan changes only. */
   def normalize(plan: String): String = {
@@ -32,6 +34,7 @@ object Explain {
       "RDD\\[\\d+\\]" -> "RDD[*]",
       "_gen-\\d+" -> "_gen-*",
       "(/tmp/graft-[A-Za-z-]*-)\\d+" -> "$1*",
+      "(/graft-warehouse/[^/]+-)[0-9a-f]{12}/" -> "$1*/",
       "\\$\\$Lambda[$\\d]*/0x[0-9a-f]+@[0-9a-f]+" -> "\\$\\$Lambda")
     masks.foldLeft(renumber(renumber(plan, "(#)(\\d+)"),
         "(lambda \\w+?_)(\\d+)")) {

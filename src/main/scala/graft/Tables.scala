@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
@@ -53,6 +54,26 @@ object Tables {
       inferred.get.schema
     }
     inferred.getOrElse(scan(spark, basePath, paths, Some(schema)))
+  }
+
+  /** [[parquet]] of member dirs of committed `Connectors` snapshots —
+    * generations a table wrote, or external members it references —
+    * through the same schema memo, resolved without the path check a
+    * `DataFrameReader` makes. That check logs "All paths were ignored" for
+    * every read whose root names all start with `_`, as every
+    * generation's does (Spark's listing hides such names below a root,
+    * not the root itself, and the read goes ahead). A committed pointer
+    * names each dir, so it exists. */
+  def memberDirs(spark: SparkSession, dirs: String*): DataFrame = {
+    def resolve(schema: Option[StructType]): DataFrame =
+      spark.baseRelationToDataFrame(DataSource(spark, "parquet", dirs,
+        userSpecifiedSchema = schema).resolveRelation(checkFilesExist = false))
+    var inferred: Option[DataFrame] = None
+    val schema = schemas((dirs, None), dirs) {
+      inferred = Some(resolve(None))
+      inferred.get.schema
+    }
+    inferred.getOrElse(resolve(Some(schema)))
   }
 
   /** Seed the memo for a generation a writer just committed from a frame

@@ -37,20 +37,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -75,4 +63,22 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The fold itself, for interpreted evaluation and for kernels that score
+    * many pairs per row (`NearestCells`): null on a length mismatch or a
+    * null element. */
+  def fold(x: ArrayData, y: ArrayData): java.lang.Double = {
+    if (x.numElements() != y.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    val n = x.numElements()
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }

@@ -24,6 +24,7 @@ object GraftFunctions {
     "graft_md5_hi32" -> (es => Md5Half(es(0), hi = true)),
     "graft_md5_lo32" -> (es => Md5Half(es(0), hi = false)),
     "graft_md5_long64" -> (es => Md5Long64(es(0))),
+    "graft_nearest_cells" -> (es => NearestCells(es(0), es(1), es(2), es(3))),
     "graft_shingles" -> (es => Shingles(es(0), es(1))),
     "graft_simhash64" -> (es => SimHash64(es(0))),
     // Spark's own runtime-filter machinery (whole-stage-codegen'd, no UDF),

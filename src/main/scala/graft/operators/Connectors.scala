@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
@@ -298,14 +298,18 @@ object Connectors {
     * replace) through the pointer protocol — the staging catalog's
     * build-once commit. Crash-safe like every other commit here: until the
     * pointer flips, readers see the previous snapshot (or no table). */
-  def replaceTable(spark: SparkSession, targetDir: String, rows: DataFrame): Unit = {
+  def replaceTable(spark: SparkSession, targetDir: String, rows: DataFrame): Unit =
+    replaceTable(spark, targetDir, Layout(rows))
+
+  /** [[replaceTable]] of a laid-out frame, written with its file cap. */
+  def replaceTable(spark: SparkSession, targetDir: String, laid: Layout): Unit = {
     Files.createDirectories(Paths.get(targetDir))
     val prev = currentRef(targetDir)
     val gen = newGenName()
-    rows.write.parquet(s"$targetDir/$gen")
+    laid.write.parquet(s"$targetDir/$gen")
     requireGenAlive(targetDir, gen)
     commitPointer(targetDir, gen)
-    seedGeneration(spark, targetDir, gen, rows)
+    seedGeneration(spark, targetDir, gen, laid.rows)
     sweepStale(targetDir, prev)
   }
 
@@ -370,7 +374,7 @@ object Connectors {
     laid.write.parquet(s"$targetDir/$gen")
     requireGenAlive(targetDir, gen)
     commitPointer(targetDir, gen)
-    seedGeneration(spark, targetDir, gen, laid)
+    seedGeneration(spark, targetDir, gen, laid.rows)
     sweepStale(targetDir, prev)
   }
 
@@ -480,7 +484,7 @@ object Connectors {
       ref: String): DataFrame =
     ref match {
       case gen if !gen.startsWith("_manifest-") =>
-        Tables.parquet(spark, s"$targetDir/$gen")
+        Tables.memberDirs(spark, s"$targetDir/$gen")
       case m =>
         val members = readManifest(Paths.get(targetDir, m))
         val reads = members.groupBy(_._1).toSeq.sortBy(_._1).map {
@@ -501,7 +505,7 @@ object Connectors {
                 s"manifest $m of $targetDir mixes whole-dir and " +
                   s"fragment entries for member $relDir — refusing a read " +
                   "that would drop the whole-dir member's rows")
-            if (frags.isEmpty) Tables.parquet(spark, base)
+            if (frags.isEmpty) Tables.memberDirs(spark, base)
             else Tables.parquetFragments(spark, base, frags.sorted.map(f => s"$base/$f"))
         }
         // allowMissingColumns: members appended after a schema widened (or
@@ -973,23 +977,42 @@ object Connectors {
     out
   }
 
-  /** Re-lays a frame out along the Morton curve of (xCol, yCol): each
-    * dimension linearly binned to 16 bits from its measured envelope, the
-    * curve value range-partitioned into `files` buckets and sorted within
-    * partitions, then dropped — the layout survives as file order, not as a
-    * column. One envelope action + one range shuffle (a sort's cost). */
+  /** The bounds a z-layout bins its two keys on, and the frame's row count,
+    * which sizes its files. */
+  private[graft] final case class ZEnvelope(xlo: Long, xhi: Long,
+      ylo: Long, yhi: Long, rows: Long)
+
+  /** A frame laid out for one write, and the per-file row cap that write
+    * applies through the writer's `maxRecordsPerFile` option (0: no cap). */
+  private[graft] final case class Layout(rows: DataFrame, maxRecordsPerFile: Long = 0L) {
+    def write: DataFrameWriter[Row] =
+      if (maxRecordsPerFile > 0) rows.write.option("maxRecordsPerFile", maxRecordsPerFile)
+      else rows.write
+  }
+
+  /** Re-lays a frame out along the Morton curve of (xCol, yCol) into about
+    * `files` z-contiguous files: each dimension linearly binned to 16 bits
+    * from its measured envelope, the curve value range-partitioned into one
+    * range per core (at most `files`) and sorted within partitions, then
+    * dropped — the layout survives as file order, not as a column. The
+    * write caps each file at ⌈rows / files⌉ rows, so a range splits into
+    * consecutive files and the table lands as `files` to
+    * `files + ranges − 1` files in z order of their names, written by one
+    * task per range instead of one per file. One envelope action (with the
+    * row count) + one range shuffle (a sort's cost); the range partitioner
+    * samples by reading its input once more. */
   private[graft] def zlayout(df: DataFrame, xCol: String, yCol: String,
-      files: Int,
-      envOpt: Option[(Long, Long, Long, Long)] = None): DataFrame = {
+      files: Int, envOpt: Option[ZEnvelope] = None): Layout = {
     // envOpt: a caller-supplied CONSERVATIVE envelope (any superset of the
-    // true bounds bins correctly, just at slightly coarser resolution) —
-    // for frames whose construction is expensive, measuring the envelope
-    // with an agg action would evaluate the build subtree twice (once for
-    // the bounds, once for the write); a caller that can bound the keys
-    // cheaply (ivf_cells does it from one vec_id column scan) skips that.
+    // true bounds bins correctly, just at slightly coarser resolution) with
+    // the exact row count — for frames whose construction is expensive,
+    // measuring the envelope with an agg action would evaluate the build
+    // subtree once more; a caller that can bound the keys and count the
+    // rows cheaply (ivf_cells does it from one vec_id column scan and the
+    // memoized corpus count) skips that.
     val bounds = envOpt.orElse {
       val env = df.agg(min(xCol).cast("long"), max(xCol).cast("long"),
-        min(yCol).cast("long"), max(yCol).cast("long")).head()
+        min(yCol).cast("long"), max(yCol).cast("long"), count(lit(1))).head()
       // a degenerate snapshot has no envelope in one or both dimensions
       // (empty frame → all four aggregates null; an all-null key column →
       // that dimension's pair null) — and nothing to cluster on: pass it
@@ -998,22 +1021,31 @@ object Connectors {
       // a null _z, which range-partitions and sorts first — no special
       // case.
       if (env.isNullAt(0) || env.isNullAt(2)) None
-      else Some((env.getLong(0), env.getLong(1), env.getLong(2), env.getLong(3)))
+      else Some(ZEnvelope(env.getLong(0), env.getLong(1), env.getLong(2),
+        env.getLong(3), env.getLong(4)))
     }
     bounds match {
-      case None => df
-      case Some((xlo, xhi, ylo, yhi)) =>
-        // Spark's `/` is true division (double) — truncate back to the
-        // integral bin explicitly rather than leaning on the per-term
-        // implicit cast the zvalue shift ops would otherwise insert 32 times
-        def bin(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
-          if (hi == lo) lit(0L)
-          else ((c.cast("long") - lit(lo)) * lit(65535L) / lit(hi - lo)).cast("long")
-        df.withColumn("_z", zvalue(bin(col(xCol), xlo, xhi), bin(col(yCol), ylo, yhi)))
-          .repartitionByRange(files, col("_z"))
-          .sortWithinPartitions("_z")
-          .drop("_z")
+      case None => Layout(df)
+      case Some(env) =>
+        val ranges = math.min(files, df.sparkSession.sparkContext.defaultParallelism)
+        Layout(df.withColumn("_z", zkey(col(xCol), col(yCol), env))
+            .repartitionByRange(ranges, col("_z"))
+            .sortWithinPartitions("_z")
+            .drop("_z"),
+          maxRecordsPerFile = (env.rows + files - 1) / files)
     }
+  }
+
+  /** The curve value zlayout orders rows by: each key linearly binned to
+    * 16 bits over its side of the envelope. */
+  private[graft] def zkey(x: Column, y: Column, env: ZEnvelope): Column = {
+    // Spark's `/` is true division (double) — truncate back to the
+    // integral bin explicitly rather than leaning on the per-term
+    // implicit cast the zvalue shift ops would otherwise insert 32 times
+    def bin(c: Column, lo: Long, hi: Long) =
+      if (hi == lo) lit(0L)
+      else ((c.cast("long") - lit(lo)) * lit(65535L) / lit(hi - lo)).cast("long")
+    zvalue(bin(x, env.xlo, env.xhi), bin(y, env.ylo, env.yhi))
   }
 
   /** S19: Z-order (Morton-curve) data layout + multi-dimensional stats

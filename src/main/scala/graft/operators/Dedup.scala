@@ -520,7 +520,7 @@ object Dedup {
     * the members appended since (Connectors.memberDataDirs diff), instead
     * of re-deriving the full catalog scan+explode every micro-batch. */
   private[graft] def catSigBandsOf(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    bandsOf(Tables.parquet(spark, dirs: _*)
+    bandsOf(Tables.memberDirs(spark, dirs: _*)
       .select(col("doc_id") +: (0 until MinhashK).map(j => col(s"h$j")): _*),
       "corpus_id")
 

@@ -205,7 +205,12 @@ object DedupStaging {
     * holder crashed (stale mtime, or poll timeout with no commit) is
     * broken and the build retried. */
   private def materialize(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    materializeLaid(spark, dir, name)(Connectors.Layout(build))
+
+  /** [[materialize]] of a laid-out build, written with its file cap. */
+  private def materializeLaid(spark: SparkSession, dir: String, name: String)(
+      build: => Connectors.Layout): DataFrame = {
     fetchedSet.add(name)
     val path = staged.getOrElseUpdate((fingerprint(dir), name), {
       val td = tablePath(dir, name)
@@ -228,7 +233,7 @@ object DedupStaging {
   @volatile private[graft] var lockBeatMs = 30 * 1000L
 
   private def buildLocked(spark: SparkSession, dir: String, name: String,
-      td: String)(build: => DataFrame): Unit = {
+      td: String)(build: => Connectors.Layout): Unit = {
     val lock = java.nio.file.Paths.get(s"$td.building")
     java.nio.file.Files.createDirectories(lock.getParent)
     def tryAcquire(): Boolean =
@@ -467,14 +472,18 @@ object DedupStaging {
     * makes the files' ordinary per-column min/max stats tight in both
     * dimensions at once, where a 1-dim sort serves one pattern and
     * spreads the other across every file. One range shuffle (a sort's
-    * cost) per index RELEASE; layout changes bytes touched, never
-    * answers — the staged rows are identical, DedupStagingSpec pins the
-    * files-touched contrast on both read shapes, and every ANN oracle
-    * replays unchanged. */
+    * cost) per index RELEASE, written by one task per core into 64 to
+    * 64 + cores − 1 z-contiguous files; layout changes bytes touched,
+    * never answers — the staged rows are identical, DedupStagingSpec pins
+    * the files-touched contrast on both read shapes, and every ANN oracle
+    * replays unchanged. The build itself is one map-side pass
+    * (Similarity.assignToCells), which the range partitioner's sampling
+    * job runs a second time. */
   def ivfCells(spark: SparkSession, dir: String): DataFrame =
-    materialize(spark, dir, "ivf_cells") {
-      // envelope precomputed from one vec_id-column scan so the N×√N
-      // assignment runs ONCE (the write), not twice (bounds + write)
+    materializeLaid(spark, dir, "ivf_cells") {
+      // envelope and row count come from one vec_id-column scan and the
+      // memoized corpus count, so no action evaluates the assignment just
+      // to size the layout
       Connectors.zlayout(Similarity.ivfIndexBuild(spark, dir),
         "cell", "vec_id", files = 64,
         envOpt = Similarity.ivfLayoutEnvelope(spark, dir))
@@ -512,7 +521,7 @@ object DedupStaging {
     * search, vec_id-ranged lifecycle) and shares the same precomputed
     * envelope (cells are centroid ids in both tables). */
   def ivfPqCodes(spark: SparkSession, dir: String): DataFrame =
-    materialize(spark, dir, "ivfpq_codes") {
+    materializeLaid(spark, dir, "ivfpq_codes") {
       Connectors.zlayout(
         Similarity.ivfPqCodesBuild(spark, dir, ivfPqCodebook(spark, dir)),
         "cell", "vec_id", files = 64,

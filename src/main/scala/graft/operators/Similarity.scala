@@ -318,32 +318,37 @@ object Similarity {
   /** The IVF-Flat index build: the whole corpus with its nearest-cell
     * assignment — staged once per corpus version by DedupStaging.ivfCells
     * (the build-once/search-many shape; before r12 every search re-ran
-    * this N×√N pass). */
-  private[operators] def ivfIndexBuild(spark: SparkSession, dir: String): DataFrame =
+    * this N×√N pass). One map-side pass over the corpus (assignToCells);
+    * the z-layout's range sampling reads every row too, so the kernel runs
+    * twice per build, once there and once in the write. */
+  private[graft] def ivfIndexBuild(spark: SparkSession, dir: String): DataFrame =
     ivfAssign(spark, dir, base(spark, dir), 1)
 
   /** Conservative (cell, vec_id) envelope for the staged index's z-layout,
-    * from ONE cheap vec_id-column scan: cells are centroid ids (the vec_ids
+    * from ONE cheap vec_id-column scan, with the corpus count (memoized) as
+    * the row count that sizes its files — both staged IVF tables hold one
+    * row per corpus vector. Cells are centroid ids (the vec_ids
     * at `ivfStride` multiples — the CELL stride, not the query-probe
     * stride: r17 ADVICE caught the envelope computed at probeStride, which
     * exceeds ivfStride past N = 1600 and would exclude the extreme centroid
     * ids, wrapping their cells' z-bins), so the centroid-id bounds bound
     * every assignment. Measuring the envelope on the built frame instead
-    * would run the O(N·√N) assignment twice per staging commit — once for
-    * the bounds action, once for the write (the ProfContam
-    * double-evaluation class, avoided here by construction). A superset
-    * envelope bins correctly, just at coarser resolution. */
-  private[operators] def ivfLayoutEnvelope(spark: SparkSession,
-      dir: String): Option[(Long, Long, Long, Long)] = {
+    * would run the assignment once more per staging commit, for the bounds
+    * action (the ProfContam double-evaluation class, avoided here by
+    * construction). A superset envelope bins correctly, just at coarser
+    * resolution. */
+  private[graft] def ivfLayoutEnvelope(spark: SparkSession,
+      dir: String): Option[Connectors.ZEnvelope] = {
     val env = base(spark, dir)
       .agg(min("vec_id").cast("long"), max("vec_id").cast("long")).head()
     if (env.isNullAt(0)) None
     else {
       val (lo, hi) = (env.getLong(0), env.getLong(1))
-      val stride = ivfStride(corpusN(spark, dir))
+      val n = corpusN(spark, dir)
+      val stride = ivfStride(n)
       val clo = ((lo + stride - 1) / stride) * stride // smallest centroid id
       val chi = (hi / stride) * stride                // largest centroid id
-      if (clo > chi) None else Some((clo, chi, lo, hi))
+      if (clo > chi) None else Some(Connectors.ZEnvelope(clo, chi, lo, hi, n))
     }
   }
 
@@ -354,14 +359,21 @@ object Similarity {
       df: DataFrame, k: Int): DataFrame =
     assignToCells(df, releaseCentroids(spark, dir), k)
 
-  /** The release quantizer: centroids at every `ivfStride`-th id —
-    * release-scoped state a streaming admission binds ONCE at job start
-    * (m4o persists it across micro-batches) and batch callers derive
-    * inline. √N rows, always broadcast-sized. */
+  /** The release quantizer: centroids at every `ivfStride`-th id, as the
+    * one-row centroid table assignToCells broadcasts — release-scoped state
+    * a streaming admission binds ONCE at job start (m4o persists it across
+    * micro-batches) and batch callers derive inline. */
   private[graft] def releaseCentroids(spark: SparkSession, dir: String): DataFrame =
-    base(spark, dir)
+    centroidTable(base(spark, dir)
       .filter(col("vec_id") % ivfStride(corpusN(spark, dir)) === 0)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("norm").as("cnorm"))
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("norm").as("cnorm")))
+
+  /** √N `(cent_id, cv, cnorm)` rows → ONE row holding them as the array
+    * `graft_nearest_cells` scans. An empty centroid set collapses to no row,
+    * so assigning against it keeps no vector. */
+  private[graft] def centroidTable(cents: DataFrame): DataFrame =
+    cents.agg(collect_list(struct(col("cent_id"), col("cv"), col("cnorm"))).as("cents"))
+      .filter(size(col("cents")) > 0)
 
   /** Raw embeddings rows → the (vec_id, v, norm) frame every IVF path
     * consumes — shared with the streaming admission, whose micro-batches
@@ -373,23 +385,25 @@ object Similarity {
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
   }
 
-  /** Nearest-cell assignment against a given (frozen) centroid frame —
-    * the coarse-quantizer core shared by the index build, query-side probe
-    * routing, the incremental admissions, and the streaming admission. */
+  /** Nearest-cell assignment against a given (frozen) centroid table
+    * (releaseCentroids) — the coarse-quantizer core shared by the index
+    * build, query-side probe routing, the incremental admissions, and the
+    * streaming admission.
+    *
+    * One map-side pass: the one-row centroid table broadcasts and
+    * `graft_nearest_cells` picks each vector's `k` best cells in the order
+    * `row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id)`
+    * would, with no N×√N scored frame, no sort and no join back to the
+    * input. k = 1 reads the cell straight off the result; k > 1 explodes
+    * it, best cell first. Every input row is kept, so `vec_id` needs to be
+    * a key only for the caller's own reads. */
   private[graft] def assignToCells(df: DataFrame, cents: DataFrame,
       k: Int = 1): DataFrame = {
-    // score, then rank the SKINNY (vec_id, cent_id, csim) frame — the
-    // N×√N assignment window must not carry the vectors through its sort
-    // (the topKBySim argument, at index-build volume); the kept cells join
-    // back to the input on the vector key to reattach v/norm.
-    val scored = df.crossJoin(broadcast(cents))
-      .withColumn("csim", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .select(col("vec_id"), col("cent_id"), col("csim"))
-    val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
-    val kept = scored.withColumn("crn", row_number().over(w))
-      .filter(col("crn") <= k).select(col("vec_id"), col("cent_id").as("cell"))
-    df.join(kept, Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("norm"), col("cell"))
+    val near = call_function("graft_nearest_cells",
+      col("v"), col("norm"), col("cents"), lit(k))
+    df.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("v"), col("norm"),
+        (if (k == 1) near.getItem(0) else explode(near)).as("cell"))
   }
 
   /** M6: IVF index-health report — the one-row release artifact an ANN

@@ -128,13 +128,15 @@ object TextAnalysis {
       .groupBy("d", "bucket").agg(sum("tf").as("s"))
 
   /** The exact top-k terms with their rank — sort+limit
-    * (TakeOrderedAndProject, never a vocabulary-wide window); the rank
-    * window runs over the k-row result. */
-  private[graft] def cmsTopTerms(tf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * (TakeOrderedAndProject, never a vocabulary-wide window). The k rows
+    * are numbered by sorting them as one array, (−tf, term) ascending, and
+    * exploding it with positions: no window, so no unpartitioned one. */
+  private[graft] def cmsTopTerms(tf: DataFrame): DataFrame =
     tf.orderBy(col("tf").desc, col("term")).limit(CmsTopK)
-      .withColumn("rk", row_number().over(Window.orderBy(col("tf").desc, col("term"))))
-  }
+      .agg(sort_array(collect_list(struct((-col("tf")).as("neg"), col("term")))).as("top"))
+      .select(posexplode(col("top")))
+      .select(col("col.term").as("term"), (-col("col.neg")).as("tf"),
+        (col("pos") + 1).as("rk"))
 
   /** Point-query: estimate each probe term against the sketch — min over
     * its CmsRows bucket sums, so est ≥ true tf with the classic ε = e/w

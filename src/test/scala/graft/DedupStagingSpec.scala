@@ -40,27 +40,52 @@ class DedupStagingSpec extends AnyFunSuite with SparkFixture {
     assert(!Files.exists(Paths.get(table).getParent), "stale fixture version swept")
   }
 
-  test("ivf_cells stages z-laid-out: cell probes AND vec_id ranges read few files") {
-    import org.apache.spark.sql.functions._
-    // a private fixture copy — fresh fingerprint, fresh warehouse table,
-    // so the layout under test is the one THIS code commits
+  /** A private copy of the sf0.1 embeddings — fresh fingerprint, fresh
+    * warehouse table, so the layout under test is the one THIS code
+    * commits — and the task count of every stage of its ivf_cells build
+    * that wrote output. */
+  private lazy val zivf: (String, Seq[Int]) = {
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     val fix = Files.createTempDirectory("staging-zivf-").toString
     Files.copy(Paths.get("/root/testdata/sf0.1/embeddings.parquet"),
       Paths.get(fix, "embeddings.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.outputMetrics.bytesWritten > 0)
+          writes.add(e.stageInfo.numTasks)
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      DedupStaging.resetMemo()
+      DedupStaging.ivfCells(spark, fix)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (fix, writes.asScala.toSeq)
+  }
+
+  test("ivf_cells stages z-laid-out: cell probes AND vec_id ranges read few files") {
+    import org.apache.spark.sql.functions._
+    val fix = zivf._1
     DedupStaging.resetMemo()
     val cells = DedupStaging.ivfCells(spark, fix)
     def touched(df: org.apache.spark.sql.DataFrame) =
       df.select(input_file_name()).distinct().count()
     val total = touched(cells)
-    // serving-path read: an nprobe=2 probe confines to two cells
-    val twoCells = cells.select("cell").distinct().limit(2)
+    // serving-path read: an nprobe=2 probe confines to two cells, the two
+    // smallest ids — a pick that does not follow file order
+    val twoCells = cells.select("cell").distinct().orderBy("cell").limit(2)
       .collect().map(_.getLong(0))
     val probe = touched(cells.filter(col("cell").isin(twoCells.map(Long.box): _*)))
     // lifecycle read: a vec_id range (the forget/compact tombstone shape)
     val env = cells.agg(min("vec_id").cast("long"), max("vec_id").cast("long")).head()
     val (lo, hi) = (env.getLong(0), env.getLong(1))
     val range = touched(cells.filter(col("vec_id") <= lo + (hi - lo) / 8))
-    info(s"files: total=$total probe2cells=$probe vecRange=$range")
+    info(s"files: total=$total probe2cells(${twoCells.mkString(",")})=$probe vecRange=$range")
     // measured on the deterministic sf0.1 fixture: 19 and 11 of 64; the
     // pins carry slack for range-partitioner sampling variance. The point
     // is BOTH patterns confine at once — a 1-dim cell sort would serve the
@@ -68,6 +93,31 @@ class DedupStagingSpec extends AnyFunSuite with SparkFixture {
     assert(total >= 32, s"layout should spread across files, saw $total")
     assert(probe <= 28, s"2-cell probe touched $probe of $total files")
     assert(range <= 20, s"vec_id range read touched $range of $total files")
+  }
+
+  test("ivf_cells is written by one task per core into z-contiguous files") {
+    import org.apache.spark.sql.functions._
+    val (fix, writeStages) = zivf
+    val cores = spark.sparkContext.defaultParallelism
+    assert(writeStages.nonEmpty, "the build wrote nothing")
+    assert(writeStages.forall(_ <= cores),
+      s"write stages ran ${writeStages.mkString(", ")} tasks on $cores cores")
+    DedupStaging.resetMemo()
+    val cells = DedupStaging.ivfCells(spark, fix)
+    val env = operators.Similarity.ivfLayoutEnvelope(spark, fix).get
+    // each file's z span, in file-name order: the spans must not overlap
+    val spans = cells
+      .select(input_file_name().as("f"),
+        Connectors.zkey(col("cell"), col("vec_id"), env).as("z"))
+      .groupBy("f").agg(min("z"), max("z")).collect()
+      .map(r => (Paths.get(new java.net.URI(r.getString(0))).getFileName.toString,
+        r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    assert(spans.length >= 64 && spans.length <= 64 + cores - 1,
+      s"expected 64 to ${64 + cores - 1} files, saw ${spans.length}")
+    spans.sliding(2).foreach { case Array(a, b) =>
+      assert(a._3 <= b._2, s"${a._1} (z ≤ ${a._3}) overlaps ${b._1} (z ≥ ${b._2})")
+    }
   }
 
   test("a live build heartbeats its lock so stale-lock breaking never hits it") {

@@ -155,7 +155,7 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture {
     val registry = spark.sessionState.functionRegistry
     val names = Seq("graft_dot", "graft_fold60", "graft_md5_hi32", "graft_md5_lo32",
       "graft_md5_long64", "graft_bloom_agg", "graft_bloom_might_contain",
-      "graft_shingles", "graft_simhash64")
+      "graft_shingles", "graft_simhash64", "graft_nearest_cells")
     GraftFunctions.register(spark)
     val infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
     assert(infos.forall(_.isDefined), s"unresolved: ${names.zip(infos)}")

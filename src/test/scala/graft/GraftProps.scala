@@ -611,6 +611,151 @@ object GraftProps extends Properties("graft") {
       }
     }
 
+  // ---- IVF nearest-cell kernel (Similarity.assignToCells) ----------------
+  // graft_nearest_cells must keep, per vector, exactly the cells the window
+  // formulation it replaced ranks 1..k: row_number over (vec_id) ordered by
+  // csim DESC, cent_id. The generated cases are built for the corners of
+  // that order — exact ties (small-integer vectors, duplicated centroids),
+  // NaN and ±∞ similarities (NaN/∞ norms and elements, tiny norms whose
+  // product stays nonzero), zero norms (null csim without ANSI), null
+  // vectors, norms, centroid vectors, elements and one null cent_id,
+  // length mismatches, k above the centroid count, and cases with no
+  // centroid at all. Every case runs in one DataFrame pass per k, keyed by
+  // case id; the kernel sees each case's centroids in collect_list order,
+  // so it is checked not to depend on that order either.
+  private object Ivf {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+
+    private val specials = Array(0.0, -0.0, 1e-160, -1e-160, 1e200,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    private def element(rnd: scala.util.Random): Any =
+      if (rnd.nextInt(40) == 0) null
+      else if (rnd.nextInt(6) == 0) specials(rnd.nextInt(specials.length))
+      else (rnd.nextInt(5) - 2).toDouble
+    private def vector(rnd: scala.util.Random): Any =
+      if (rnd.nextInt(15) == 0) null
+      else Seq.fill(if (rnd.nextInt(20) == 0) 2 else 3)(element(rnd))
+    // zero divisors only where ANSI is off: there they score null
+    private def norm(rnd: scala.util.Random, zeros: Boolean, tiny: Double): Any = {
+      val pool = Seq[Any](null, 1.0, 2.0, 0.5, 3.0, -1.0, tiny, Double.NaN,
+        Double.PositiveInfinity) ++ (if (zeros) Seq(0.0, -0.0) else Nil)
+      pool(rnd.nextInt(pool.size))
+    }
+
+    private val vecSchema = StructType(Seq(StructField("case", IntegerType),
+      StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType)),
+      StructField("norm", DoubleType)))
+    private val centSchema = StructType(Seq(StructField("case", IntegerType),
+      StructField("cent_id", LongType), StructField("cv", ArrayType(DoubleType)),
+      StructField("cnorm", DoubleType)))
+
+    /** (vectors, centroids) of `n` generated cases. */
+    def cases(seed: Long, n: Int, zeros: Boolean): (DataFrame, DataFrame) = {
+      val rnd = new scala.util.Random(seed)
+      val vecs = Seq.newBuilder[Row]
+      val cents = Seq.newBuilder[Row]
+      (0 until n).foreach { c =>
+        (0 until 1 + rnd.nextInt(4)).foreach { i =>
+          vecs += Row(c, i.toLong, vector(rnd), norm(rnd, zeros, 1e-300))
+        }
+        val ids = rnd.shuffle((0 until 10).toList).take(rnd.nextInt(6))
+        val nullId = if (rnd.nextInt(10) == 0) ids.headOption else None
+        var last: Any = null
+        ids.foreach { id =>
+          // a third of the centroids repeat the previous one: exact ties
+          val cv = if (last != null && rnd.nextInt(3) == 0) last else vector(rnd)
+          last = cv
+          cents += Row(c, if (nullId.contains(id)) null else id.toLong, cv,
+            norm(rnd, zeros, 1e-10))
+        }
+      }
+      val spark = SparkFixture.session
+      import scala.jdk.CollectionConverters._
+      (spark.createDataFrame(vecs.result().asJava, vecSchema),
+        spark.createDataFrame(cents.result().asJava, centSchema))
+    }
+
+    import org.apache.spark.sql.functions._
+    /** The window formulation assignToCells replaced, per case. */
+    def reference(vecs: DataFrame, cents: DataFrame, k: Int): DataFrame = {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("case", "vec_id")
+        .orderBy(col("csim").desc, col("cent_id"))
+      vecs.join(cents, "case")
+        .withColumn("csim", call_function("graft_dot", col("v"), col("cv")) /
+          (col("norm") * col("cnorm")))
+        .withColumn("crn", row_number().over(w)).filter(col("crn") <= k)
+        .select(col("case"), col("vec_id"), col("crn"), col("cent_id"))
+    }
+    /** The kernel against each case's centroid array. */
+    def kernel(vecs: DataFrame, cents: DataFrame, k: Int): DataFrame =
+      vecs.join(cents.groupBy("case").agg(collect_list(
+          struct(col("cent_id"), col("cv"), col("cnorm"))).as("cents")), "case")
+        .select(col("case"), col("vec_id"), posexplode(call_function(
+          "graft_nearest_cells", col("v"), col("norm"), col("cents"), lit(k))))
+        .select(col("case"), col("vec_id"), (col("pos") + 1).as("crn"),
+          col("col").as("cent_id"))
+    def rows(df: DataFrame): Seq[(Int, Long, Int, Option[Long])] =
+      df.collect().toSeq.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
+        Option(r.get(3)).map(_.asInstanceOf[Long]))).sorted
+
+    def withAnsi[T](on: Boolean)(f: => T): T = {
+      val conf = SparkFixture.session.conf
+      val key = "spark.sql.ansi.enabled"
+      val prev = conf.get(key)
+      conf.set(key, on.toString)
+      try f finally conf.set(key, prev)
+    }
+  }
+
+  property("nearest cells: graft_nearest_cells == the csim window, zero norms scoring null") =
+    Prop.secure {
+      Ivf.withAnsi(on = false) {
+        val (vecs, cents) = Ivf.cases(20261020L, 300, zeros = true)
+        (1 to 4).forall(k =>
+          Ivf.rows(Ivf.kernel(vecs, cents, k)) == Ivf.rows(Ivf.reference(vecs, cents, k)))
+      }
+    }
+
+  property("nearest cells: graft_nearest_cells == the csim window under ANSI; a zero divisor fails both") =
+    Prop.secure {
+      Ivf.withAnsi(on = true) {
+        val (vecs, cents) = Ivf.cases(20261021L, 300, zeros = false)
+        val same = (1 to 4).forall(k =>
+          Ivf.rows(Ivf.kernel(vecs, cents, k)) == Ivf.rows(Ivf.reference(vecs, cents, k)))
+        // a zero norm under a non-null dot is DIVIDE_BY_ZERO in both
+        val spark = SparkFixture.session
+        import spark.implicits._
+        val zv = Seq((0, 0L, Seq(1.0, 0.0), 0.0)).toDF("case", "vec_id", "v", "norm")
+        val zc = Seq((0, 7L, Seq(1.0, 1.0), 1.0)).toDF("case", "cent_id", "cv", "cnorm")
+        def fails(df: => org.apache.spark.sql.DataFrame) =
+          scala.util.Try(df.collect()).failed.toOption
+            .exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO"))
+        same && fails(Ivf.kernel(zv, zc, 1)) && fails(Ivf.reference(zv, zc, 1))
+      }
+    }
+
+  property("nearest cells: assignToCells keeps every vector with its k best cells; no centroid, no row") =
+    Prop.secure {
+      import org.apache.spark.sql.functions.{col, desc}
+      val (allVecs, allCents) = Ivf.cases(20261022L, 20, zeros = false)
+      // the generated case with the most centroids
+      val c = allCents.groupBy("case").count()
+        .orderBy(desc("count"), col("case")).head().getInt(0)
+      val (vecs, cents) = (allVecs.filter(col("case") === c), allCents.filter(col("case") === c))
+      val one = vecs.drop("case")
+      val table = graft.operators.Similarity.centroidTable(cents.drop("case"))
+      val empty = graft.operators.Similarity.centroidTable(cents.drop("case").limit(0))
+      (1 to 3).forall { k =>
+        val got = graft.operators.Similarity.assignToCells(one, table, k)
+          .select(col("vec_id"), col("cell")).collect()
+          .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]))).sorted.toSeq
+        val want = Ivf.rows(Ivf.reference(vecs, cents, k)).map(r => (r._2, r._4)).sorted
+        got == want
+      } && graft.operators.Similarity.assignToCells(one, empty, 1).count() == 0 &&
+        graft.operators.Similarity.assignToCells(one, empty, 2).count() == 0
+    }
+
   // The PCM fingerprint's STRUCTURAL plant guarantee, on arbitrary clips
   // rather than the fixture: delta-sign bits compare neighboring segment
   // energies around the ring, so a perturbation confined to segment 0 can

@@ -69,6 +69,47 @@ class ParquetReaderSpec extends AnyFunSuite with SparkFixture {
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("snapshot reads of generations and external members log no ignored-paths WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    // Spark logs it from DataSource's path check, once per read whose root
+    // names are all hidden — every `_gen-*` dir
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("ignored-paths-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("All paths were ignored"))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    def warnings(f: => Any): Int = {
+      seen.clear()
+      val level = logger.getLevel
+      probe.start()
+      logger.addAppender(probe)
+      logger.setLevel(Level.WARN)
+      try f finally { logger.removeAppender(probe); logger.setLevel(level) }
+      seen.size
+    }
+    val gen = tmp("reader-warn-gen-")
+    Connectors.replaceTable(spark, gen, Seq((1L, "a")).toDF("k", "v"))
+    val cat = tmp("reader-warn-cat-")
+    Connectors.appendMemberRef(spark, cat, Connectors.memberDataDirs(gen).head)
+    Connectors.appendTo(spark, cat, Seq((2L, "b")).toDF("k", "v"))
+    // the probe hears the warning where it is still logged: a plain read
+    assert(warnings(Tables.parquet(spark, Connectors.memberDataDirs(gen).head)) == 1)
+    assert(warnings {
+      assert(Connectors.readTable(spark, gen).count() == 1)
+      assert(Connectors.readTable(spark, cat).count() == 2)
+      // the incremental reference read over several member dirs at once
+      assert(Tables.memberDirs(spark, Connectors.memberDataDirs(cat): _*).count() == 2)
+    } == 0)
+  }
+
   test("a path rewritten with a different schema is read with the new schema") {
     import spark.implicits._
     val p = tmp("reader-rewrite-")

@@ -19,6 +19,25 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
     s
   }
 
+  /** Whether `name`'s plan moves rows through a single-partition exchange
+    * anywhere but inside a broadcast side (cached plans and subqueries
+    * included). */
+  private def funnelsOutsideBroadcasts(name: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    def walk(p: QueryPlan[_]): Boolean = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case _: BroadcastExchangeExec => false
+      case s: ShuffleExchangeExec if s.outputPartitioning == SinglePartition => true
+      case other => (other.children.asInstanceOf[Seq[QueryPlan[_]]] ++
+        other.innerChildren).exists(walk)
+    }
+    try walk(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+    finally spark.catalog.clearCache()
+  }
+
   /** How many times `name`'s plan reads each persisted intermediate. Reads
     * nested inside another cache's plan count too (a frame persisted over
     * a persisted frame reads it there). */
@@ -183,8 +202,14 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
     val p = plan("m6_ann_ivfpq")
     assert("BroadcastExchange".r.findAllIn(p).length >= 3,
       s"codebook/centroids/probes must broadcast:\n$p")
-    assert(!p.contains("Exchange SinglePartition") || p.contains("TakeOrderedAndProject"),
+    // the one-row centroid table assignToCells broadcasts is collapsed
+    // through a single-partition exchange of √N centroids; a broadcast
+    // side is collected whole to the driver anyway, so only the rest of the
+    // plan can funnel the corpus
+    assert(!funnelsOutsideBroadcasts("m6_ann_ivfpq") || p.contains("TakeOrderedAndProject"),
       s"ivfpq must not funnel the corpus through one partition:\n$p")
+    assert(funnelsOutsideBroadcasts("m6_ivf_stats"),
+      "the funnel check must see m6_ivf_stats' main-side global aggregate")
     assert(!p.contains("CartesianProduct"),
       s"ivfpq candidate join must stay equi-keyed (no cartesian):\n$p")
     // classifier inference: one partial+final keyed agg, no window, no
@@ -320,6 +345,25 @@ class PlanContractSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("phrase_index"), s"search must read the staged index:\n$p")
     assert(!p.contains("documents.parquet"),
       s"phrase search must not scan the raw corpus:\n$p")
+  }
+
+  test("IVF assignment is one map-side pass: no assignment window, no vec_id join-back") {
+    // the nearest-cell kernel replaced a cross join + row_number window
+    // over N×√N scored rows + a join back to the vectors on vec_id; the
+    // index build and the probe routing of the cell-probed search must not
+    // grow either back
+    val joinBack = """(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \[vec_id#""".r
+    val build = operators.Similarity.ivfIndexBuild(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert(!build.contains("Window"), s"IVF build must be window-free:\n$build")
+    assert(joinBack.findFirstIn(build).isEmpty, s"IVF build joins back on vec_id:\n$build")
+    assert(build.contains("graft_nearest_cells"), s"IVF build must use the kernel:\n$build")
+    val ivf = plan("m6_ann_ivf")
+    // its one window is the per-probe rank (topKBySim), keyed by q_id
+    assert("Window \\[".r.findAllIn(ivf).length == 1 &&
+      !ivf.contains("windowspecdefinition(vec_id"),
+      s"m6_ann_ivf may rank per probe only:\n$ivf")
+    assert(joinBack.findFirstIn(ivf).isEmpty, s"m6_ann_ivf joins back on vec_id:\n$ivf")
   }
 
   test("round-15: incremental IVF search reads the admission catalog zero-copy") {

@@ -35,7 +35,7 @@ time("m6_ngram_jaccard")(Dedup.ngramJaccard(spark, dir))
 time("m6_simhash_pairs")(Dedup.simhashPairs(spark, dir))
 
 val t1 = System.nanoTime()
-val src = StreamingJobs.stage(spark, dir, 4)
+val src = StreamingJobs.stage(Tables.events(spark, dir), 4)
 println(f"## m4 stage                    ${(System.nanoTime() - t1) / 1e9}%8.2f s")
 val t2 = System.nanoTime()
 val sink = java.nio.file.Files.createTempDirectory("prof-sink-").toString
