@@ -699,13 +699,17 @@ object GraftProps extends Properties("graft") {
       df.collect().toSeq.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         Option(r.get(3)).map(_.asInstanceOf[Long]))).sorted
 
-    def withAnsi[T](on: Boolean)(f: => T): T = {
+    def withConf[T](pairs: (String, String)*)(f: => T): T = {
       val conf = SparkFixture.session.conf
-      val key = "spark.sql.ansi.enabled"
-      val prev = conf.get(key)
-      conf.set(key, on.toString)
-      try f finally conf.set(key, prev)
+      val prev = pairs.map { case (k, _) => k -> conf.getOption(k) }
+      pairs.foreach { case (k, v) => conf.set(k, v) }
+      try f finally prev.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None)    => conf.unset(k)
+      }
     }
+    def withAnsi[T](on: Boolean)(f: => T): T =
+      withConf("spark.sql.ansi.enabled" -> on.toString)(f)
   }
 
   property("nearest cells: graft_nearest_cells == the csim window, zero norms scoring null") =
@@ -713,7 +717,12 @@ object GraftProps extends Properties("graft") {
       Ivf.withAnsi(on = false) {
         val (vecs, cents) = Ivf.cases(20261020L, 300, zeros = true)
         (1 to 4).forall(k =>
-          Ivf.rows(Ivf.kernel(vecs, cents, k)) == Ivf.rows(Ivf.reference(vecs, cents, k)))
+          Ivf.rows(Ivf.kernel(vecs, cents, k)) == Ivf.rows(Ivf.reference(vecs, cents, k))) &&
+          // the interpreted path too, as a codegen fallback would run it
+          Ivf.withConf("spark.sql.codegen.wholeStage" -> "false",
+              "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+            Ivf.rows(Ivf.kernel(vecs, cents, 2)) == Ivf.rows(Ivf.reference(vecs, cents, 2))
+          }
       }
     }
 
