@@ -2,6 +2,52 @@ package graft
 import graft.operators.{DedupStaging, Joins}
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Times bench entries (queries and staging builds), each in its own
+    * profile span. Wall time is the headline; process CPU time rides along
+    * so a loaded machine is detectable in the artifact itself (wall far
+    * above cpu/32 on a 32-thread run = external contention, not plan cost —
+    * the r4 recording was inflated exactly that way).
+    *
+    * An entry that throws is reported in `failed` (name → exception class)
+    * and gets neither a time nor a profile record — timing a failure as a
+    * success would score a broken entry as fast. The bench continues: a
+    * custom sf dir missing a table must not abort the other entries. */
+  final class Entries(profile: Profile) {
+    private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val spans = scala.collection.mutable.LinkedHashMap.empty[String, Profile.Span]
+
+    def apply(name: String)(body: => Unit): Option[(String, Double, Double)] = {
+      profile.open()
+      val r =
+        try {
+          val w0 = System.nanoTime()
+          val c0 = os.getProcessCpuTime
+          body
+          Some((name, (System.nanoTime() - w0) / 1e9, (os.getProcessCpuTime - c0) / 1e9))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e")
+          failed(name) = e.getClass.getName
+          None
+        }
+      // outside the timed window: close() waits for the listener bus, so
+      // every event of this entry lands in its span
+      val span = profile.close()
+      if (r.isDefined) spans(name) = span
+      r
+    }
+
+    def failedJson: String =
+      Profile.obj(failed.toSeq.map { case (k, v) => k -> ("\"" + v + "\"") })
+
+    /** The profile sidecar: one record per timed entry, one per line, and
+      * the same `failed` map as both stdout lines. */
+    def sidecar(results: Seq[(String, Double, Double)]): String =
+      results.map { case (n, w, c) => s"\"$n\":" + spans(n).json(w, c) }
+        .mkString("{\"entries\":{\n", ",\n", s"\n},\n\"failed\":$failedJson}\n")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -95,36 +141,15 @@ object Bench {
     // to the corpus). Pre-build it here as its own TIMED entry so the
     // one-time cost is visible in the report instead of silently landing on
     // whichever family query happens to run first.
-    // Wall time is the headline; process CPU time rides along per query so a
-    // loaded machine is detectable in the artifact itself (wall far above
-    // cpu/32 on a 32-thread run = external contention, not plan cost — the
-    // r4 recording was inflated exactly that way), as is the OS load
-    // average at both ends of the run.
+    // The OS load average at both ends of the run rides along, like each
+    // entry's process CPU time, so a loaded machine is detectable in the
+    // artifact itself.
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val loadStart = os.getSystemLoadAverage
-    def timed(body: => Unit): (Double, Double) = {
-      val w0 = System.nanoTime()
-      val c0 = os.getProcessCpuTime
-      body
-      ((System.nanoTime() - w0) / 1e9, (os.getProcessCpuTime - c0) / 1e9)
-    }
-    // An entry (query or staging build) that throws is reported in the
-    // `failed` map (name → exception class) of both stdout lines and left
-    // out of every time map and total — timing a failure as a success
-    // would score a broken entry as fast. The bench continues: a custom sf
-    // dir missing a table must not abort the other ~90 entries. A
-    // SPARK_GRAFT_QUERIES name the registry lacks is failed too.
-    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val entries = new Entries(Profile.attach(spark))
+    // A SPARK_GRAFT_QUERIES name the registry lacks is failed too.
     only.foreach(_.diff(SparkEntry.queries.keySet).toSeq.sorted
-      .foreach(failed(_) = "not registered"))
-    def entry(name: String)(body: => Unit): Option[(String, Double, Double)] =
-      try { val (w, c) = timed(body); Some((name, w, c)) }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e")
-        failed(name) = e.getClass.getName
-        None
-      }
+      .foreach(entries.failed(_) = "not registered"))
     val selectedNames = selected.map(_._1).toSet
     // stage TEMPERATURE: the same staging entry costs ~seconds cold (first
     // build for this corpus version) and ~nothing warm (committed warehouse
@@ -135,7 +160,7 @@ object Bench {
     def stage(name: String, needed: Boolean, ready: => Boolean)(
         build: => Unit): Seq[(String, Double, Double)] =
       if (!needed) Seq.empty
-      else { stagingCold(name) = !ready; entry(name)(build).toSeq }
+      else { stagingCold(name) = !ready; entries(name)(build).toSeq }
     val staging =
       stage("m6_stage_base", DedupStaging.stagingFor(selectedNames, ann = false).nonEmpty,
         DedupStaging.isStagedFor(sfDir, selectedNames)) {
@@ -157,7 +182,7 @@ object Bench {
     val results = staging ++ selected.flatMap { case (name, fn) =>
       // noop sink: full evaluation of every output column (a bare count()
       // would let Catalyst prune the projections away), zero write cost.
-      val r = entry(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      val r = entries(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       // per-query cache isolation: operators may persist() shared subplans;
       // dropping them between entries keeps attribution honest and the
       // 90+-query session from accumulating every cache for its lifetime
@@ -173,12 +198,10 @@ object Bench {
       System.gc()
       r
     }
-    def fmt(xs: Seq[(String, Any)]) =
-      xs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failedJson = fmt(failed.toSeq.map { case (k, v) => k -> ("\"" + v + "\"") })
+    val failedJson = entries.failedJson
     val total = results.map(_._2).sum
     val cpuTotal = results.map(_._3).sum
-    val coldJson = fmt(stagingCold.toSeq)
+    val coldJson = Profile.obj(stagingCold.toSeq)
     // Subtotals: the streaming drains are fixed RocksDB/checkpoint
     // machinery at test scale and carry nearly all the cross-machine jitter
     // (round-7 A/B: 57–62 s for near-identical code), so round-over-round
@@ -198,8 +221,8 @@ object Bench {
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""batch_total":$batchTotal,"drain_total":$drainTotal,""" +
       s""""staging_total":$stagingTotal,""" +
-      s""""queries":${fmt(results.map(r => r._1 -> r._2))},""" +
-      s""""cpu_sec":${fmt(results.map(r => r._1 -> r._3))},""" +
+      s""""queries":${Profile.obj(results.map(r => r._1 -> r._2))},""" +
+      s""""cpu_sec":${Profile.obj(results.map(r => r._1 -> r._3))},""" +
       s""""failed":$failedJson,""" +
       s""""staging_cold":$coldJson,""" +
       s""""cpu_total":$cpuTotal,"load_avg_gate":$loadGate,""" +
@@ -214,12 +237,14 @@ object Bench {
     val top = results.sortBy(-_._2).take(30)
     val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_DRIVER_LAST.json")
+    // the profile sidecar sits next to the full map, under the same rule
+    val profileOut = fullOut.stripSuffix(".json") + ".profile.json"
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""batch_total":$batchTotal,"drain_total":$drainTotal,""" +
       s""""staging_total":$stagingTotal,"cpu_total":$cpuTotal,""" +
       s""""n_entries":${results.size},"load_avg_gate":$loadGate,""" +
       s""""contended":$contended,"sf":"$sfDir",""" +
-      s""""queries":${fmt(top.map(r => r._1 -> r._2))},""" +
+      s""""queries":${Profile.obj(top.map(r => r._1 -> r._2))},""" +
       s""""queries_omitted":${results.size - top.size},""" +
       s""""failed":$failedJson,""" +
       s""""full_map":"$fullOut"}"""
@@ -240,19 +265,19 @@ object Bench {
     if (!defaultOutOk)
       System.err.println(s"[bench] skipping default $fullOut write: CWD is " +
         "not a repo root (set SPARK_GRAFT_BENCH_OUT to persist the full map)")
-    if (defaultOutOk) {
-      val p = fullOut
-      // a bad path must not fail the run AFTER all measurements completed —
-      // the stdout JSON above is already the primary record
-      try {
-        val path = java.nio.file.Paths.get(p)
-        Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.writeString(path, json + "\n")
-        System.err.println(s"[bench] wrote $p")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] failed to write $p: $e")
+    // a bad path must not fail the run AFTER all measurements completed —
+    // the stdout JSON above is already the primary record
+    if (defaultOutOk) Seq(fullOut -> (json + "\n"), profileOut -> entries.sidecar(results))
+      .foreach { case (p, text) =>
+        try {
+          val path = java.nio.file.Paths.get(p)
+          Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
+          java.nio.file.Files.writeString(path, text)
+          System.err.println(s"[bench] wrote $p")
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] failed to write $p: $e")
+        }
       }
-    }
     spark.stop()
   }
 }

@@ -1082,41 +1082,23 @@ object Dedup {
     * the regime this operator exists for. The hit set rides a broadcast
     * (held-out benchmarks stay small in production by definition); the two
     * distinct counts are branches of ONE keyed aggregation pass. */
-  def contaminationScore(spark: SparkSession, dir: String): DataFrame =
-    contaminationScoreOf(contaminationProbeSide(spark, dir),
-      contaminationBench(spark, dir))
-
-  /** The PARTIAL-plant branch of the contamination probe side — held-out
-    * text with every 16th token mutated, re-shingled raw (the plants are
-    * new documents, so they cannot ride the staged table). Exposed
-    * per-stage so ProfContam can attribute the operator's 100×-probe cost
-    * (plants tokenization vs broadcast build vs probe-side hash table);
-    * the composition in `contaminationScore` is unchanged. */
-  private[graft] def contaminationPlants(spark: SparkSession, dir: String): DataFrame = {
+  def contaminationScore(spark: SparkSession, dir: String): DataFrame = {
+    val training = DedupStaging.shingle8(spark, dir).filter(col("doc_id") % 97 =!= 0)
+    // the plants are new documents, so they cannot ride the staged table:
+    // held-out text with every 16th token mutated, re-shingled raw
     val mutated = transform(
       TextAnalysis.normTokens(col("text")),
       (t, i) => when(i % 16 === 0, concat(t, lit("x"))).otherwise(t))
-    Tables.documents(spark, dir)
+    val plants = Tables.documents(spark, dir)
       .filter(col("doc_id") % 97 === 0)
       .select((col("doc_id") + 3000000).as("doc_id"),
         array_distinct(shingles(mutated, 8)).as("sh"))
       .select(col("doc_id"),
         explode(transform(col("sh"), s => md5Fold60(s))).as("h"))
-  }
-
-  /** Training-corpus shingles + partial plants — the rows that probe the
-    * broadcast hit set. */
-  private[graft] def contaminationProbeSide(spark: SparkSession, dir: String): DataFrame =
-    DedupStaging.shingle8(spark, dir).filter(col("doc_id") % 97 =!= 0)
-      .unionAll(contaminationPlants(spark, dir))
-
-  /** The held-out hit set that rides the broadcast. */
-  private[graft] def contaminationBench(spark: SparkSession, dir: String): DataFrame =
-    DedupStaging.shingle8(spark, dir).filter(col("doc_id") % 97 === 0)
+    // the held-out hit set that rides the broadcast
+    val bench = DedupStaging.shingle8(spark, dir).filter(col("doc_id") % 97 === 0)
       .select("h").distinct().withColumn("hit", lit(1))
-
-  private[graft] def contaminationScoreOf(probeSide: DataFrame, bench: DataFrame): DataFrame = {
-    probeSide
+    training.unionAll(plants)
       .join(broadcast(bench), Seq("h"), "left")
       .groupBy("doc_id")
       // (doc_id, h) rows are UNIQUE by construction — shingle8 distincts at

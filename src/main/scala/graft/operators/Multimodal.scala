@@ -319,8 +319,9 @@ object Multimodal {
     * Skew-robust blocking (r15): perceptual hashes of a real corpus are
     * heavily DEGENERATE — letterboxed frames, blank images, and (here) the
     * constant 'x' pad tail drive whole hash regions to fixed values, so
-    * chunk buckets are not uniform: the r15 ProfAhash census at the 100×
-    * probe measured 537,867 images → 2.24e9 doc-keyed candidate pairs with
+    * chunk buckets are not uniform: the r15 aHash census at the 100×
+    * probe (BENCH_AHASH_sf10.json) measured 537,867 images → 2.24e9
+    * doc-keyed candidate pairs with
     * 83% of that mass in ONE all-ones bucket, while only 26,929 DISTINCT
     * hashes exist (20× collapse) and their bucketed pair volume is 8.0e6
     * (280× less). ahashPairs therefore collapses identical signatures
@@ -353,10 +354,8 @@ object Multimodal {
 
   /** The image-corpus fixture behind ahashNearDup: the ASCII documents plus
     * the two plant families (every 31st re-encoded verbatim, every 23rd
-    * with its last two pixels perturbed). Exposed per-stage (with
-    * `ahashHashedOf` / `ahashChunksOf` / `ahashPairs`) so ProfAhash can
-    * attribute the operator's 100×-probe cost decode-vs-hash-vs-join; the
-    * composition in `ahashNearDup` is unchanged. */
+    * with its last two pixels perturbed). m4v's replay source
+    * (`StreamingJobs.stagedImageClips`) and the specs build on it too. */
   private[graft] def ahashCorpus(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
       .filter(octet_length(col("text")) === length(col("text")))
@@ -372,8 +371,8 @@ object Multimodal {
   final case class PadScan(doc_id: Long, ok: Boolean, height: Int, pad_rows: Int)
 
   /** M7: letterbox / constant-pad detection — the quarantine census for the
-    * exact degeneracy the r15 aHash probe MEASURED (ProfAhash,
-    * BENCH_AHASH_sf10.json: the constant pad tail drives 11% of the corpus
+    * exact degeneracy the r15 aHash probe MEASURED (BENCH_AHASH_sf10.json:
+    * the constant pad tail drives 11% of the corpus
     * to one all-ones hash region, 83% of naive candidate-pair mass): per
     * image, the count of TRAILING rows whose every pixel is the pad gray
     * (letterbox bars / blank frames in a real corpus), from genuinely
@@ -480,7 +479,8 @@ object Multimodal {
     * doc-level pairs are reconstituted by output-sized joins at the end.
     *
     * Letterbox quarantine (r16): pad-degenerate images — the measured
-    * driver of the residual all-ones chunk bucket (ProfAhash: even after
+    * driver of the residual all-ones chunk bucket (BENCH_AHASH_sf10.json:
+    * even after
     * signature collapse, one bucket holds the bulk of remaining candidate
     * mass, all of it pad-tail signatures) — are EXCLUDED from the chunk
     * join and route to the exact-signature path only: a quarantined
@@ -965,8 +965,9 @@ object Multimodal {
     * grow with the corpus over a fixed key space; the horizontal form's
     * 64 pixels mix neighboring source pixels (j reads chars ⌊3j/4⌋,
     * ⌊(3j+1)/4⌋, ⌊(3j+2)/4⌋), which keeps groups 92%-unique at sf0.1 —
-    * but even this form collapses as the corpus grows (ProfKeyframe at
-    * the 100× fixture: 829 k keyframes over 31 k distinct signatures,
+    * but even this form collapses as the corpus grows (the keyframe census
+    * at the 100× fixture, BENCH_KEYFRAME_sf10.json: 829 k keyframes over
+    * 31 k distinct signatures,
     * max group 653 — near-identical opening frames are a property of the
     * DATA, not the hash), which is why keyframeAhash emits cluster star
     * edges rather than within-group pairs. */
@@ -1001,8 +1002,9 @@ object Multimodal {
     * the dedup signal, and cluster membership (what dedup consumes —
     * the m6_dup_clusters star-edge convention, also used by
     * pairCuration's side-dup edges) is identical to the all-pairs form.
-    * All-pairs output was REJECTED on measured grounds (ProfKeyframe,
-    * round 19): opening frames collapse onto few signatures as the corpus
+    * All-pairs output was REJECTED on measured grounds (the round-19
+    * keyframe census, BENCH_KEYFRAME_sf10.json): opening frames collapse
+    * onto few signatures as the corpus
     * grows — at the 100× fixture 829,094 keyframes share only 31,174
     * distinct signatures (92% unique at sf0.1; max group 653), so the
     * identical-signature pair leg alone held 37.8 M rows and the probe

@@ -334,8 +334,8 @@ object Similarity {
     * ids, wrapping their cells' z-bins), so the centroid-id bounds bound
     * every assignment. Measuring the envelope on the built frame instead
     * would run the assignment once more per staging commit, for the bounds
-    * action (the ProfContam double-evaluation class, avoided here by
-    * construction). A superset envelope bins correctly, just at coarser
+    * action (the double-evaluation class the r17 contamination census
+    * found, BENCH_CONTAM_sf10.json; avoided here by construction). A superset envelope bins correctly, just at coarser
     * resolution. */
   private[graft] def ivfLayoutEnvelope(spark: SparkSession,
       dir: String): Option[Connectors.ZEnvelope] = {

@@ -24,7 +24,8 @@ import java.nio.file.Files
   *     (user_id, window_start) (streaming_job.py:461-533)
   *   - state store: RocksDB provider + checkpointing
   *     (streaming_job.py:174-182)
-  *   - monitoring: graft.streaming.Metrics listener (streaming_job.py:632-687)
+  *   - monitoring: the graft.Profile listener Bench attaches, per-batch
+  *     progress and slow-batch alerts (streaming_job.py:632-687)
   *   - dedup: dropDuplicatesWithinWatermark — the reference's 5-second
   *     bucket suppression with 1-minute state GC (validation_consumer.py:353-409)
   *   - exact-vs-near classification: flatMapGroupsWithState with event-time

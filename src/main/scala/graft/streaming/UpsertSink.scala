@@ -27,7 +27,8 @@ object UpsertSink {
   /** foreachBatch hook: append the micro-batch stamped with its id. Skips
     * empty batches like the reference's `df.rdd.isEmpty()` guard
     * (streaming_job.py:566-568), but in ONE Spark action instead of the old
-    * guard-then-write pair (r19 ProfDrain: the separate isEmpty probe cost
+    * guard-then-write pair (r19 drain census, plans/r20/profdrain_pre.txt and
+    * profdrain_post.txt: the separate isEmpty probe cost
     * one extra job round-trip per micro-batch across every drain, and the
     * persist it required re-ran the incremental plan's first partitions):
     * the batch writes once to a sibling staging dir with an observed row

@@ -45,7 +45,7 @@ class DedupStagingSpec extends AnyFunSuite with SparkFixture {
     * commits — and the task count of every stage of its ivf_cells build
     * that wrote output. */
   private lazy val zivf: (String, Seq[Int]) = {
-    import org.apache.spark.TestBus
+    import org.apache.spark.GraftBus
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     val fix = Files.createTempDirectory("staging-zivf-").toString
     Files.copy(Paths.get("/root/testdata/sf0.1/embeddings.parquet"),
@@ -57,12 +57,12 @@ class DedupStagingSpec extends AnyFunSuite with SparkFixture {
         if (e.stageInfo.taskMetrics.outputMetrics.bytesWritten > 0)
           writes.add(e.stageInfo.numTasks)
     }
-    TestBus.drain(sc)
+    GraftBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       DedupStaging.resetMemo()
       DedupStaging.ivfCells(spark, fix)
-      TestBus.drain(sc)
+      GraftBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     (fix, writes.asScala.toSeq)

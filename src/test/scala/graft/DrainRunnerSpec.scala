@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.WindowAggregates
-import graft.streaming.{Metrics, StreamingJobs, UpsertSink}
+import graft.streaming.{StreamingJobs, UpsertSink}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -74,7 +74,7 @@ class DrainRunnerSpec extends AnyFunSuite with SparkFixture {
     spark.listenerManager.register(listener)
     try {
       StreamingJobs.stage(Tables.events(spark, fixture), 3)
-      org.apache.spark.TestBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     val helper = new AdaptiveSparkPlanHelper {}
     val plans: Seq[SparkPlan] = seen.toArray(Array.empty[QueryExecution]).toSeq
@@ -89,16 +89,15 @@ class DrainRunnerSpec extends AnyFunSuite with SparkFixture {
       s"expected one range exchange:\n${plans.head}")
   }
 
-  /** Run `body` with a fresh Metrics listener and return its batches once
-    * the listener bus has delivered every event. */
-  private def batchesOf(body: => Unit): List[Metrics#BatchStat] = {
-    val metrics = new Metrics()
-    spark.streams.addListener(metrics)
+  /** Run `body` in a profile span and return its micro-batches once the
+    * listener bus has delivered every event. */
+  private def batchesOf(body: => Unit): Seq[Profile.Batch] = {
+    val profile = Profile.attach(spark)
     try {
+      profile.open()
       body
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      metrics.batches
-    } finally spark.streams.removeListener(metrics)
+      profile.close().batches.toSeq
+    } finally profile.detach()
   }
 
   test("an update-mode drain runs one micro-batch per file, none empty, and equals its batch twin") {

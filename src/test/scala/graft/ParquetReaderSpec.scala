@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Connectors
-import org.apache.spark.TestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
@@ -28,11 +28,11 @@ class ParquetReaderSpec extends AnyFunSuite with SparkFixture {
   private def jobsDuring(f: => Any): Int = {
     probeListener
     val sc = spark.sparkContext
-    TestBus.drain(sc)
+    GraftBus.drain(sc)
     val before = probeJobs.get()
     sc.setLocalProperty(probeKey, "on")
     try f finally sc.setLocalProperty(probeKey, null)
-    TestBus.drain(sc)
+    GraftBus.drain(sc)
     probeJobs.get() - before
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.WindowAggregates
-import graft.streaming.{Metrics, StreamingJobs, UpsertSink}
+import graft.streaming.{StreamingJobs, UpsertSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -146,24 +146,22 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     eventsDf(Seq((1L, 0, 1.0), (2L, 1, 2.0))).coalesce(1).write.mode("append").parquet(src)
     eventsDf(Seq((3L, 2, 3.0))).coalesce(1).write.mode("append").parquet(src)
 
-    val metrics = new Metrics(slowBatchMillis = 5000L)
-    spark.streams.addListener(metrics)
+    val profile = Profile.attach(spark, slowBatchMillis = 5000L)
     try {
+      profile.open()
       StreamingJobs.drainUpdate(
         StreamingJobs.streamWindowAgg(StreamingJobs.readEventStream(spark, src)),
         sink)
-      // listener events are async — wait for the bus to drain
-      val deadline = System.currentTimeMillis() + 10000
-      while (metrics.totalInputRows < 3 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(metrics.started >= 1)
+      // close() waits for the listener bus to deliver every event
+      val metrics = profile.close()
+      assert(metrics.streamsStarted >= 1)
       assert(metrics.totalInputRows == 3L)
       assert(metrics.batches.nonEmpty)
       // maxFilesPerTrigger=1 must split the two staged files into two batches
       assert(metrics.batches.count(_.numInputRows > 0) >= 2,
         s"expected 2+ micro-batches, got: ${metrics.batches}")
       assert(metrics.batches.forall(_.stateRows >= 0))
-    } finally spark.streams.removeListener(metrics)
+    } finally profile.detach()
   }
 
   test("slow-batch alert surfaces through the queryable metrics DataFrame") {
@@ -173,15 +171,14 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     eventsDf(Seq((3L, 10, 3.0))).coalesce(1).write.mode("append").parquet(src)
     // threshold 0 ms: every real trigger exceeds it — exercises the alert
     // path deterministically (the reference's production threshold is 5 s)
-    val metrics = new Metrics(slowBatchMillis = 0L)
-    spark.streams.addListener(metrics)
+    val profile = Profile.attach(spark, slowBatchMillis = 0L)
     try {
+      profile.open()
       StreamingJobs.drainUpdate(
         StreamingJobs.streamWindowAgg(StreamingJobs.readEventStream(spark, src)),
         sink)
-      val deadline = System.currentTimeMillis() + 10000
-      while (metrics.totalInputRows < 3 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
+      val metrics = profile.close()
+      assert(metrics.totalInputRows == 3L)
       // the metrics table is queryable like any DataFrame...
       val df = metrics.toDF(spark)
       assert(df.count() == metrics.batches.size.toLong)
@@ -191,7 +188,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .map(_.getLong(0)).toSet
       assert(alerted.nonEmpty)
       assert(alerted == metrics.slowBatches.map(_.batchId).toSet)
-    } finally spark.streams.removeListener(metrics)
+    } finally profile.detach()
   }
 
   test("stream-stream join drains a hot-key fixture and equals its batch twin") {
@@ -212,9 +209,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     df.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(src)
     df.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(src)
 
-    val metrics = new Metrics()
-    spark.streams.addListener(metrics)
+    val profile = Profile.attach(spark)
     try {
+      profile.open()
       def leg(tpe: String, idAs: String, tsAs: String, userAs: String) =
         StreamingJobs.readEventStream(spark, src)
           .filter(col("event_type") === tpe)
@@ -228,6 +225,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
             col("purchase_ts") < col("view_ts") + expr("INTERVAL 1 HOUR"))
         .select(col("view_id"), col("purchase_id"))
       StreamingJobs.drainAppend(joined, sink)
+      val metrics = profile.close()
       val streamed = UpsertSink.appended(spark, sink)
         .as[(Long, Long)].collect().toSet
 
@@ -252,13 +250,10 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
       // bounded state: the join buffered no more than the input volume —
       // watermark eviction keeps per-key state from accumulating the stream
-      val deadline = System.currentTimeMillis() + 10000
-      while (metrics.batches.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
       val maxState = metrics.batches.map(_.stateRows).max
       assert(maxState > 0 && maxState <= rows.size.toLong,
         s"state rows $maxState outside (0, ${rows.size}]")
-    } finally spark.streams.removeListener(metrics)
+    } finally profile.detach()
   }
 
   test("a drain stopped mid-stream resumes from its checkpoint and equals the batch twin") {
